@@ -70,7 +70,11 @@ def plan_fingerprint(df) -> str:
     changing — strip them so the fingerprint moves only when the
     shape/strategy does. (The lambda normalization was added in r8:
     without it, in-suite fingerprints of every HOF-bearing query
-    depended on test execution order.)"""
+    depended on test execution order.) The partition count of a
+    ``Repartition`` / ``RepartitionByExpression`` node is a host
+    setting too (``load_star_table_spread`` repartitions to the
+    session's parallelism), so it renders as ``N``; the node itself
+    still counts."""
     import hashlib
 
     s = df._jdf.queryExecution().optimizedPlan().toString()
@@ -78,6 +82,9 @@ def plan_fingerprint(df) -> str:
     s = re.sub(r"\b([a-z])_\d+\b", r"\1_", s)  # lambda vars: x_7 -> x_
     s = re.sub(r"@[0-9a-f]+", "@", s)
     s = re.sub(r"file:[^\s,\]\)]*", "file:", s)
+    s = re.sub(r"\bRepartition \d+,", "Repartition N,", s)
+    s = re.sub(r"(\bRepartitionByExpression .*), \d+$", r"\1, N", s,
+               flags=re.M)
     return hashlib.md5(s.encode()).hexdigest()[:12]
 
 

@@ -34,9 +34,10 @@ endpoint is the form a real deployment fronts with any UI):
 Every response is bounded (S14): ``max_rows`` is clamped to
 ``ROW_CAP`` — the server never streams an unbounded collect to a
 browser, which is the failure mode the reference's trust-the-user
-LIMIT policy invites. Errors come back as JSON with an HTTP status,
-and a failed statement never kills the server (same contract as
-``serve_repl``).
+LIMIT policy invites. Errors come back as JSON with an HTTP status —
+400 for a bad request (:data:`REQUEST_ERRORS`), 500 for a server
+fault — and a failed statement never kills the server (same contract
+as ``serve_repl``).
 
 Concurrency: ``ThreadingHTTPServer`` + Spark's thread-safe
 ``spark.sql`` — concurrent requests become concurrent Spark jobs
@@ -54,9 +55,21 @@ import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
+from pyspark.errors import AnalysisException
+
 from .serving import ServingLayer
 
 ROW_CAP = 10_000  # absolute ceiling on rows per response (S14)
+
+# exceptions that mean the REQUEST is wrong (bad body, unknown table or
+# column, unparsable SQL) — answered 400; anything else is a server
+# fault (e.g. a Py4JJavaError from the store's JDBC connection) and
+# answers 500. json.JSONDecodeError is a ValueError.
+REQUEST_ERRORS = (ValueError, KeyError, TypeError, AnalysisException)
+
+
+def _error_status(exc: Exception) -> int:
+    return 400 if isinstance(exc, REQUEST_ERRORS) else 500
 
 
 def _json_safe(v):
@@ -148,7 +161,7 @@ class _Handler(BaseHTTPRequestHandler):
             else:
                 self._send(404, {"error": f"no route {url.path}"})
         except Exception as exc:  # surface, keep serving
-            self._send(400, {"error": str(exc)})
+            self._send(_error_status(exc), {"error": str(exc)})
 
     def do_POST(self) -> None:
         url = urlparse(self.path)
@@ -199,8 +212,8 @@ class _Handler(BaseHTTPRequestHandler):
                 self._send(200, plan_report(self.serving.query(sql)))
             else:
                 self._send(404, {"error": f"no route {url.path}"})
-        except Exception as exc:
-            self._send(400, {"error": str(exc)})
+        except Exception as exc:  # surface, keep serving
+            self._send(_error_status(exc), {"error": str(exc)})
 
 
 def run_curate_dry(serving: ServingLayer, req: dict) -> dict:

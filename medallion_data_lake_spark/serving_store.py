@@ -17,11 +17,12 @@ Spark-first:
   so the store is a transaction-consistent cut of the lake;
 - REQUESTS run over a plain ``java.sql`` connection through the
   driver JVM — one prepared statement, no Spark plan, no job. The
-  store carries everything per-request scoring needs precomputed by
-  Spark at export time (idf per term, corpus avgdl), so the request
-  SQL evaluates only IEEE double arithmetic identical to the lake
-  plan's (:func:`operators.inverted_index.bm25_term_score` — same ops,
-  same order).
+  store keeps each posting's BM25 impact, precomputed by Spark at
+  export, as a fixed-point BIGINT ``impact_fx``: the lake plan's
+  ``decimal(28,12)`` impact times 10¹², through the same cast
+  (:func:`operators.inverted_index.bm25_term_score`). The request SQL
+  only sums and compares these integers, which is exact, so every
+  bm25 ranking and score equals the lake's bit for bit.
 
 At 100 TB the shape is unchanged: the export is a bounded distributed
 write (postings/doclens are index tables that track the corpus's
@@ -81,6 +82,8 @@ from .sources.sinks import write_jdbc
 
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 ROW_CAP = 10_000  # same driver-side bound as serving.py
+# impact_fx = the lake's decimal(28,12) impact x 10^12 (exact BIGINT)
+FX_SCALE = 10 ** 12
 
 # Store-side table names (one namespace per store database).
 T_POSTINGS = "mdls_postings"
@@ -123,6 +126,9 @@ class ServingStore:
             # Embedded drivers may not be DriverManager-registered yet.
             jvm.java.lang.Class.forName(driver)
         self._conn = jvm.java.sql.DriverManager.getConnection(url)
+        # the pruned bm25 path names its indexes through Derby
+        # optimizer overrides
+        self._derby = url.startswith("jdbc:derby")
         # prepared-statement cache (r16): statement COMPILE is the
         # store's per-request fixed cost (~10-25 ms measured on the 50k
         # clone — larger than executing a bounded probe); the request
@@ -217,33 +223,34 @@ class ServingStore:
     # -- search surface -------------------------------------------------
 
     def bm25(self, terms: list[str], k: int = 10) -> dict:
-        """Top-``k`` Okapi BM25 from the exported index — ONE
-        covering-index scan + group-by, zero joins.
+        """Top-``k`` Okapi BM25 from the exported index. Result columns
+        match ``bm25_search``: (doc_id, n_terms_matched, score).
 
-        The per-(term, doc) BM25 contribution ("impact") was
-        precomputed BY SPARK at export with the exact
-        :func:`bm25_term_score` expression the lake plan evaluates —
-        every score component (tf, dl, avgdl, idf) is frozen at the
-        exported snapshot, so materializing the product is pure
-        denormalization, the impact-ordered-postings trick every
-        serving-grade index (e.g. Lucene impacts) uses. The per-doc sum
-        goes through the same ``decimal(28,12)`` order-independence
-        cast as the lake plan. Result columns match ``bm25_search``:
-        (doc_id, n_terms_matched, score).
+        Each posting carries its BM25 contribution precomputed BY SPARK
+        at export with the exact :func:`bm25_term_score` expression the
+        lake plan evaluates (every component — tf, dl, avgdl, idf — is
+        frozen at the exported snapshot), as the fixed-point BIGINT
+        ``impact_fx``: the lake's ``decimal(28,12)`` cast of that
+        impact, times 10¹². Every statement below sums, orders and cuts
+        on these integers; integer sums are exact and order-free, so
+        the per-doc sum equals the lake's decimal sum scaled by 10¹²,
+        ranks (score desc, doc_id asc) the same way, and ``sum / 10¹²``
+        (correctly rounded) is the lake's double score bit for bit.
 
         k1/b live in the exported impacts; a different (k1, b) needs a
         re-export, the same way it needs a re-scan in the lake.
 
-        r16: requests first try the PRUNED probe-and-cut path
-        (:meth:`_bm25_pruned` — impact-ordered early termination, the
-        Lucene-impacts trick the docstring above alludes to), which is
-        provably exact whenever it returns; every other case falls back
-        to this full covering-index group-by. ``last_bm25_mode`` /
+        Requests whose terms' posting mass exceeds what a pruned attempt
+        can touch first try the PRUNED probe-and-cut path
+        (:meth:`_bm25_pruned` — impact-ordered early termination),
+        which is exact whenever it returns; every other case runs the
+        full covering-index group-by. ``last_bm25_mode`` /
         ``bm25_stats`` record which path answered."""
         terms = sorted(set(terms))
         if not terms:
             raise ValueError("bm25 needs at least one query term")
         k = max(1, min(int(k), ROW_CAP))
+        self._require_impact_fx()
         out = self._bm25_pruned(terms, k)
         if out is not None:
             self.last_bm25_mode = "pruned"
@@ -253,107 +260,102 @@ class ServingStore:
         self.bm25_stats["full"] += 1
         return self._bm25_full(terms, k)
 
+    def _require_impact_fx(self) -> None:
+        """Refuse a store whose postings predate fixed-point impacts
+        (memoized metadata check, no per-request cost)."""
+        if not getattr(self, "_impact_fx_ok", False):
+            if "impact_fx" not in self.columns(T_POSTINGS):
+                raise ValueError(
+                    f"{T_POSTINGS} has no impact_fx column: the store "
+                    "was exported in an older format — re-export it "
+                    "with export_search_store"
+                )
+            self._impact_fx_ok = True
+
     def _bm25_full(self, terms: list[str], k: int) -> dict:
-        """The original exhaustive form: ONE covering-index scan of
-        every query term's full posting list + group-by. Always exact;
-        cost tracks the terms' total posting mass."""
+        """The exhaustive form: ONE covering-index scan of every query
+        term's full posting list + group-by. Always exact; cost tracks
+        the terms' total posting mass."""
         marks = ", ".join("?" for _ in terms)
         # Spark's JDBC writer creates QUOTED lower-case columns; Derby
         # folds unquoted identifiers to upper case, so every column
         # reference here must stay quoted.
-        # ORDER BY the DECIMAL sum itself, casting to double only in
-        # the projection: the lake plan orders by the decimal(28,12)
-        # sum before casting, so ordering the double here could rank
-        # two docs differently at the k boundary when their decimal
-        # scores differ below double precision (r13 advice).
         sql = (
             'SELECT p."doc_id", COUNT(*) AS n_terms_matched, '
-            'CAST(SUM(CAST(p."impact" AS DECIMAL(28,12))) AS DOUBLE) '
-            "AS score "
+            'SUM(p."impact_fx") AS score '
             f"FROM {T_POSTINGS} p "
             f'WHERE p."term" IN ({marks}) '
             'GROUP BY p."doc_id" '
-            'ORDER BY SUM(CAST(p."impact" AS DECIMAL(28,12))) DESC, '
-            f'p."doc_id" ASC FETCH FIRST {k} ROWS ONLY'
+            f'ORDER BY 3 DESC, 1 ASC FETCH FIRST {k} ROWS ONLY'
         )
-        return self.query(sql, list(terms), max_rows=k)
+        return _fx_scores(self.query(sql, list(terms), max_rows=k))
 
     # pruned-path tuning — conservatism knobs, never correctness:
     # PRUNE_CAND_CAP bounds the server-side candidate set the final
-    # statement re-scores; PRUNE_K_MAX skips pruning for deep result
-    # pages (probes fetch k rows/term); PRUNE_MIN_DF skips it when the
-    # query terms' total posting mass is already small enough that the
-    # exhaustive covering-index scan is the cheaper plan.
+    # statement re-scores (and so the postings an attempt can touch,
+    # see _prune_budget); PRUNE_K_MAX skips pruning for deep result
+    # pages (probes fetch k rows/term).
     PRUNE_CAND_CAP = 2048
     PRUNE_K_MAX = 256
-    PRUNE_MIN_DF = 3000
 
-    def _derby_hints(self) -> bool:
-        """Pruning needs the r16 impact-ordered index and (on Derby)
-        optimizer overrides naming it; a store exported before r16 has
-        neither — memoized metadata probe, no per-request cost."""
-        if getattr(self, "_prune_ready", None) is None:
-            ready = False
-            if self.url.startswith("jdbc:derby"):
-                rs = self._conn.getMetaData().getIndexInfo(
-                    None, None, T_POSTINGS.upper(), False, False)
-                while rs.next():
-                    if (rs.getString("INDEX_NAME") or "").upper() \
-                            == "IDX_POSTINGS_IMPACT":
-                        ready = True
-                rs.close()
-            self._prune_ready = ready
-        return self._prune_ready
+    def _prune_budget(self, m: int, k: int) -> int:
+        """The most postings a pruned attempt over ``m`` terms can
+        touch before it gives up: m·k probe rows, two rounds of m
+        counts capped at PRUNE_CAND_CAP+1 entries each, the refine ids,
+        and up to PRUNE_CAND_CAP candidates re-scored against m lists.
+        A query whose terms hold no more postings than this is cheaper
+        to answer by the full scan, which touches each of them once."""
+        cap = self.PRUNE_CAND_CAP
+        refine_ids = _pow2_at_least(max(2 * k, 64))
+        return m * k + 2 * m * (cap + 1) + refine_ids + cap * m
 
     def _bm25_pruned(self, terms: list[str], k: int) -> dict | None:
-        """Impact-ordered early termination (r16 — the MaxScore/WAND
-        family every serving-grade index uses, e.g. Lucene impacts),
-        EXACT by construction: returns None whenever exactness cannot
-        be proven and :meth:`bm25` falls back to the full scan.
+        """Impact-ordered early termination (the MaxScore/WAND family
+        every serving-grade index uses, e.g. Lucene impacts), EXACT by
+        construction: returns None whenever exactness cannot be proven
+        and :meth:`bm25` falls back to the full scan.
 
         Bounded phases, every statement prepared-and-cached, and —
         crucial on a py4j bridge where each fetched cell is a round
         trip — NO candidate row ever crosses into Python; candidates
-        live only inside the store's engine:
+        live only inside the store's engine. All scores and thresholds
+        are ``impact_fx`` integer sums, so every comparison is exact:
 
-        0. DISPATCH: one termstats lookup; if the query terms' total df
-           is small the exhaustive scan is already index-bounded and
-           cheaper — skip pruning.
+        0. DISPATCH: one termstats lookup; unless the query terms'
+           total df exceeds :meth:`_prune_budget`, the exhaustive scan
+           touches fewer postings than a pruned attempt can — skip.
         1. PROBE: top-``k`` postings per term in impact order (walks
-           the (term, impact DESC, doc_id) index). Yields per-term max
-           impacts M_t and partial sums; θ₀ = k-th best partial.
+           the (term, impact_fx DESC, doc_id) index). Yields per-term
+           max impacts M_t and partial sums; θ₀ = k-th best partial.
         2. SPLIT (MaxScore): ascending by M_t, terms whose M_t sum
-           stays ≤ θ/2 are SKIPPED — a doc matching only those cannot
-           reach θ — and the remaining budget spreads uniformly over
-           the essential terms: c = (θ − ΣM_skipped)/n_ess. A doc
-           outside the candidate union then scores < ΣM_skipped +
-           n_ess·c = θ ≤ s_k.
+           stays ≤ θ/2 are SKIPPED (sum S), and the essential terms
+           share the rest: c = ⌊(θ − 1 − S)/n_ess⌋ + 1. A doc outside
+           the candidate union (impact_fx < c on every essential term)
+           then scores ≤ S + n_ess·(c − 1) < θ ≤ s_k.
         3. COUNT GUARD, per leg and CAPPED: each essential term's
-           impact ≥ c range is counted through a FETCH-capped derived
-           table, so a hopeless (flat-impact stopword) cut costs a
-           ≤cap-entry index walk, never a full range scan. Overflow →
-           one REFINE attempt (below), then full scan.
+           impact_fx ≥ c range is counted through a FETCH-capped
+           derived table, so a hopeless (flat-impact stopword) cut
+           costs a ≤cap-entry index walk, never a full range scan.
+           Overflow → one REFINE attempt (below), then full scan.
         4. REFINE (only when the θ₀ cut overflowed; multi-term only):
-           exact re-score of the probed docs (VALUES join, identical
-           decimal arithmetic) lifts θ to the k-th best EXACT score
-           among probed docs — still a lower bound of the true s_k,
-           but no longer hostage to probe overlap. θ only steers
-           pruning power, never correctness; the split+count runs once
-           more under the lifted θ.
+           exact re-score of the probed docs (VALUES join) lifts θ to
+           the k-th best EXACT score among probed docs — still a lower
+           bound of the true s_k, but no longer hostage to probe
+           overlap. θ only steers pruning power, never correctness; the
+           split+count runs once more under the lifted θ.
         5. FINAL: one statement — candidate union as the FORCED outer
            side, postings probed per (term, doc_id) through the
-           covering index, the exact full-scan aggregation/ordering on
-           top. Rows returned are bit-identical to the full scan's for
-           those docs (same decimal(28,12) sum, same tie-break).
+           covering index, the full scan's aggregation/ordering on top.
+           Rows returned are identical to the full scan's for those
+           docs (same integer sum, same tie-break).
 
-        Post-hoc proof obligation: with s_k = the k-th returned score,
-        ΣM_skipped + n_ess·c < s_k (minus a 1e-9 rounding guard)
-        implies every excluded doc scores strictly below the k-th
-        result — the candidate top-k IS the global top-k, including
-        the doc_id tie-break. Fewer than k rows back, or the margin
-        failing, returns None."""
+        Post-hoc proof obligation: with s_k = the k-th returned sum,
+        S + n_ess·(c − 1) < s_k means every excluded doc scores
+        strictly below the k-th result — the candidate top-k IS the
+        global top-k, including the doc_id tie-break. Fewer than k rows
+        back, or the bound failing, returns None."""
         m = len(terms)
-        if k > self.PRUNE_K_MAX or not self._derby_hints():
+        if k > self.PRUNE_K_MAX or not self._derby:
             return None
         ovi = '--DERBY-PROPERTIES index=IDX_POSTINGS_IMPACT\n'
         ovt = '--DERBY-PROPERTIES index=IDX_POSTINGS_TERM\n'
@@ -363,29 +365,30 @@ class ServingStore:
         df_sql = (f'SELECT SUM("df") FROM {T_TERMSTATS} '
                   f'WHERE "term" IN ({tmarks})')
         tot = self.query(df_sql, list(terms), max_rows=1)["rows"]
-        if not tot or tot[0][0] is None or int(tot[0][0]) < self.PRUNE_MIN_DF:
+        if not tot or tot[0][0] is None \
+                or int(tot[0][0]) <= self._prune_budget(m, k):
             return None
         # phase 1: per-term impact-ordered probes
         probe_sql = (
-            f'SELECT p."doc_id", p."impact" FROM {T_POSTINGS} p {ovi}'
-            'WHERE p."term" = ? ORDER BY p."impact" DESC '
+            f'SELECT p."doc_id", p."impact_fx" FROM {T_POSTINGS} p {ovi}'
+            'WHERE p."term" = ? ORDER BY p."impact_fx" DESC '
             f"FETCH FIRST {k} ROWS ONLY"
         )
         partial: dict = {}
-        mx: dict[str, float] = {}
+        mx: dict[str, int] = {}
         for t in terms:
             rows = self.query(probe_sql, [t], max_rows=k)["rows"]
             if rows:
-                mx[t] = float(rows[0][1])
+                mx[t] = rows[0][1]
             for doc_id, imp in rows:
-                partial[doc_id] = partial.get(doc_id, 0.0) + float(imp)
+                partial[doc_id] = partial.get(doc_id, 0) + imp
         if len(partial) < k:
             return None  # probes cannot establish a k-th threshold
         theta = sorted(partial.values(), reverse=True)[k - 1]
 
         cap = self.PRUNE_CAND_CAP
         leg = (f'SELECT c."doc_id" FROM {T_POSTINGS} c {ovi}'
-               'WHERE c."term" = ? AND c."impact" >= ?')
+               'WHERE c."term" = ? AND c."impact_fx" >= ?')
         # per-leg CAPPED count: the FETCH inside the derived table
         # bounds the index walk, so detecting a hopeless cut (flat
         # impact distribution: half the term's postings above c) costs
@@ -394,39 +397,32 @@ class ServingStore:
             f"SELECT COUNT(*) FROM ({leg} "
             f"FETCH FIRST {cap + 1} ROWS ONLY) u")
 
-        def _split_and_count(th: float):
+        def _split_and_count(th: int):
             """MaxScore split + capped per-leg counts at threshold th.
-            Returns (cparams, n_legs, skipped_sum, c) or None when the
-            cut overflows the candidate cap."""
-            th_s = th - 1e-6 * (1.0 + th)
-            asc = sorted(terms, key=lambda t: mx.get(t, 0.0))
-            skipped_sum, n_skipped = 0.0, 0
+            Returns (cparams, excluded_max) — the leg parameters and
+            the most an excluded doc can score — or None when the cut
+            overflows the candidate cap."""
+            asc = sorted(terms, key=lambda t: mx.get(t, 0))
+            skipped_sum, n_skipped = 0, 0
             for t in asc[:-1]:  # at least one essential term always
-                nxt = skipped_sum + mx.get(t, 0.0)
-                if nxt <= th_s / 2.0:
-                    skipped_sum, n_skipped = nxt, n_skipped + 1
-                else:
+                nxt = skipped_sum + mx.get(t, 0)
+                if 2 * nxt > th:
                     break
-            ess = asc[n_skipped:]
-            c = (th_s - skipped_sum) / len(ess)
-            if c <= 0.0:
-                return None
+                skipped_sum, n_skipped = nxt, n_skipped + 1
+            n_ess = m - n_skipped
+            c = (th - 1 - skipped_sum) // n_ess + 1  # ≥ 1: S ≤ θ/2
             total = 0
             cparams: list = []
-            for t in ess:
+            for t in asc[n_skipped:]:
                 n = int(self.query(leg_cnt_sql, [t, c],
                                    max_rows=1)["rows"][0][0])
                 total += n
-                if n > cap or total > cap:
+                if total > cap:
                     return None  # cut overflows; θ may be refinable
                 cparams += [t, c]
-            return cparams, len(ess), skipped_sum, c
+            return cparams, skipped_sum + n_ess * (c - 1)
 
-        # shave rationale: θ routinely EQUALS s_k (any probed doc seen
-        # under all its terms — every single-term query), and the
-        # post-hoc margin below must stay provable then. The shave only
-        # widens the candidate set — exactness never rests on it.
-        split = _split_and_count(theta) if theta > 0.0 else None
+        split = _split_and_count(theta) if theta > 0 else None
         if split is None and m > 1 \
                 and all(isinstance(d, int) for d in partial):
             # θ refinement, only now that the θ₀ cut overflowed: exact
@@ -435,14 +431,11 @@ class ServingStore:
             ids = [d for d, _ in sorted(partial.items(),
                                         key=lambda kv: -kv[1])]
             ids = ids[:max(2 * k, 64)]
-            bucket = 1
-            while bucket < len(ids):
-                bucket *= 2
-            ids = ids + [ids[0]] * (bucket - len(ids))
+            # pad to a power of two: few distinct statement texts
+            ids = ids + [ids[0]] * (_pow2_at_least(len(ids)) - len(ids))
             vmarks = ", ".join("(?)" for _ in ids)
             ref_sql = (
-                'SELECT CAST(SUM(CAST(p."impact" AS DECIMAL(28,12))) '
-                "AS DOUBLE) AS score "
+                'SELECT SUM(p."impact_fx") AS score '
                 f'FROM {ovj}'
                 f'(SELECT DISTINCT "c1" AS "doc_id" FROM '
                 # Derby refuses an all-parameter VALUES column; the -1
@@ -452,41 +445,36 @@ class ServingStore:
                 'WHERE p."doc_id" = cand."doc_id" '
                 f'AND p."term" IN ({tmarks}) '
                 'GROUP BY p."doc_id" '
-                'ORDER BY SUM(CAST(p."impact" AS DECIMAL(28,12))) DESC '
-                f"FETCH FIRST {k} ROWS ONLY"
+                f"ORDER BY 1 DESC FETCH FIRST {k} ROWS ONLY"
             )
             ref = self.query(ref_sql, ids + list(terms),
                              max_rows=k)["rows"]
-            if len(ref) >= k and float(ref[k - 1][0]) > theta:
-                theta = float(ref[k - 1][0])
+            if len(ref) >= k and ref[k - 1][0] > theta:
+                theta = ref[k - 1][0]
                 split = _split_and_count(theta)
         if split is None:
             return None
-        cparams, n_legs, skipped_sum, c = split
-        theta_s = skipped_sum + n_legs * c  # the exclusion budget
-        legs = " UNION ".join([leg] * n_legs)
+        cparams, excluded_max = split
+        legs = " UNION ".join([leg] * (len(cparams) // 2))
         # final: exact re-score over the candidate union, which never
         # leaves the store engine
         fin_sql = (
             'SELECT p."doc_id", COUNT(*) AS n_terms_matched, '
-            'CAST(SUM(CAST(p."impact" AS DECIMAL(28,12))) AS DOUBLE) '
-            "AS score "
+            'SUM(p."impact_fx") AS score '
             f"FROM {ovj}({legs}) cand, {T_POSTINGS} p {ovt}"
             'WHERE p."doc_id" = cand."doc_id" '
             f'AND p."term" IN ({tmarks}) '
             'GROUP BY p."doc_id" '
-            'ORDER BY SUM(CAST(p."impact" AS DECIMAL(28,12))) DESC, '
-            f'p."doc_id" ASC FETCH FIRST {k} ROWS ONLY'
+            f'ORDER BY 3 DESC, 1 ASC FETCH FIRST {k} ROWS ONLY'
         )
         out = self.query(fin_sql, cparams + list(terms), max_rows=k)
         if len(out["rows"]) < k:
             # matching docs may exist outside the candidate set; only
             # the full scan can distinguish "corpus has < k matches"
             return None
-        s_k = float(out["rows"][-1][2])
-        if not (theta_s < s_k - 1e-9 * (1.0 + abs(s_k))):
+        if not excluded_max < out["rows"][-1][2]:
             return None  # cannot prove excluded docs score below s_k
-        return out
+        return _fx_scores(out)
 
     def phrase(self, phrase: list[str], k: int = ROW_CAP) -> dict:
         """Exact-phrase retrieval from the exported POSITIONAL bigram
@@ -569,7 +557,7 @@ class ServingStore:
         (tests prove row-equality at the exported snapshot):
 
         - keyword branch: :meth:`bm25` top-``n_per_branch`` (selection
-          by the decimal-sum order, exactly the lake's ``limit``), then
+          by the exact integer-sum order, the lake's ``limit``), then
           ranks assigned by (double score desc, doc_id asc) — the
           lake's ``ranked()`` window verbatim;
         - vector branch: :meth:`similar` top-``n_per_branch`` (ranks
@@ -608,6 +596,17 @@ class ServingStore:
         while rs.next():
             out.add(rs.getString("TABLE_NAME").lower())
         rs.close()
+        return out
+
+    def columns(self, table: str) -> set[str]:
+        """Lower-cased column names of ``table`` (empty if absent)."""
+        md = self._conn.getMetaData()
+        out: set[str] = set()
+        for name in {table, table.upper()}:
+            rs = md.getColumns(None, None, name, None)
+            while rs.next():
+                out.add(rs.getString("COLUMN_NAME").lower())
+            rs.close()
         return out
 
     def routes(self) -> set[str]:
@@ -667,6 +666,42 @@ def _plain(v):
             return s
 
 
+def _fx_scores(out: dict) -> dict:
+    """Turn each row's fixed-point score sum (its last cell) into the
+    double ``sum / 10**12``. Python's int/int division is correctly
+    rounded, like the lake's decimal-to-double cast of the same sum."""
+    out["rows"] = [[*r[:-1], r[-1] / FX_SCALE] for r in out["rows"]]
+    return out
+
+
+def _pow2_at_least(n: int) -> int:
+    return 1 << max(0, n - 1).bit_length()
+
+
+def _posting_impacts(postings: DataFrame, termstats: DataFrame,
+                     doclens: DataFrame, avgdl: float,
+                     k1: float, b: float) -> DataFrame:
+    """(term, doc_id, tf, impact_fx): each posting's BM25 impact,
+    computed with the lake plan's :func:`bm25_term_score` and cast to
+    ``decimal(28,12)`` exactly as ``bm25_search`` casts it before its
+    sum, then scaled by 10¹² into an exact BIGINT. THE single
+    definition for the full and incremental exports. Broadcasts the
+    vocabulary-bounded termstats and shuffle-joins doclens on doc_id —
+    the join the lake search plan evaluates per query, paid once here
+    instead."""
+    impact = bm25_term_score(
+        F.col("tf"), F.col("dl"), F.lit(avgdl), F.col("idf"), k1, b)
+    return (
+        postings.join(F.broadcast(termstats.select("term", "idf")), "term")
+        .join(doclens, "doc_id")
+        .select(
+            "term", "doc_id", "tf",
+            (impact.cast("decimal(28,12)") * F.lit(FX_SCALE))
+            .cast("long").alias("impact_fx"),
+        )
+    )
+
+
 def _bigram_positions(docs: DataFrame, doc_id_col: str,
                       doc_text_col: str) -> DataFrame:
     """(bigram, doc_id, pos) — positional adjacent bigrams, 1-based to
@@ -701,12 +736,14 @@ def export_search_store(
     """Export a BM25 index's serving projection to the SQL store, all
     tables read at ONE committed snapshot:
 
-    - ``mdls_postings (term, doc_id, tf, impact)`` — ``impact`` is the
-      per-(term, doc) BM25 contribution PRECOMPUTED by Spark with the
-      exact :func:`bm25_term_score` expression the lake plan uses
-      (every component — tf, dl, avgdl, idf — is frozen at the
-      snapshot, so this is pure denormalization: a request needs NO
-      joins, just the covering index on (term, doc_id, impact));
+    - ``mdls_postings (term, doc_id, tf, impact_fx)`` — ``impact_fx``
+      is the per-(term, doc) BM25 contribution PRECOMPUTED by Spark
+      with the exact :func:`bm25_term_score` expression the lake plan
+      uses, as the lake's ``decimal(28,12)`` value times 10¹² in a
+      BIGINT (:func:`_posting_impacts`; every component — tf, dl,
+      avgdl, idf — is frozen at the snapshot, so this is pure
+      denormalization: a request needs NO joins, just the covering
+      index on (term, doc_id, impact_fx));
     - ``mdls_termstats (term, df, idf)`` — the per-term audit view
       (:func:`bm25_idf`, same expression as the lake);
     - ``mdls_corpus (n_docs, avgdl)`` — 1 row, the folded totals;
@@ -794,21 +831,7 @@ def export_search_store(
             bm25_idf(F.lit(n_docs), F.col("df")).alias("idf"),
         )
     )
-    # materialize the per-(term, doc) impact: broadcast the
-    # vocabulary-bounded termstats, shuffle-join doclens on doc_id —
-    # the same join shape the lake search plan evaluates per query,
-    # paid ONCE here instead
-    impacts = (
-        postings.join(F.broadcast(termstats.select("term", "idf")), "term")
-        .join(doclens, "doc_id")
-        .select(
-            "term", "doc_id", "tf",
-            bm25_term_score(
-                F.col("tf"), F.col("dl"), F.lit(avgdl), F.col("idf"),
-                k1, b,
-            ).alias("impact"),
-        )
-    )
+    impacts = _posting_impacts(postings, termstats, doclens, avgdl, k1, b)
     vc = f"VARCHAR({int(term_width)})"
     write_jdbc(impacts, url, T_POSTINGS, driver=driver,
                createTableColumnTypes=f"term {vc}")
@@ -828,18 +851,18 @@ def export_search_store(
         stat_tables.append(T_BIGRAM_POS)
     with ServingStore(spark, url, driver=driver) as store:
         # covering index: the bm25 statement reads (term, doc_id,
-        # impact) and nothing else — Derby answers it index-only
+        # impact_fx) and nothing else — Derby answers it index-only
         store.execute(
             f"CREATE INDEX idx_postings_term ON "
-            f'{T_POSTINGS}("term", "doc_id", "impact")')
-        # impact-ordered covering index (r16): the pruned bm25 path's
-        # probes (top-k impacts per term) and cuts (impact >= c range
+            f'{T_POSTINGS}("term", "doc_id", "impact_fx")')
+        # impact-ordered covering index: the pruned bm25 path's probes
+        # (top-k impacts per term) and cuts (impact_fx >= c range
         # scans) walk this index instead of sorting the term's whole
         # posting list; Derby maintains it through the incremental
         # export's DML like any other index
         store.execute(
             f"CREATE INDEX idx_postings_impact ON "
-            f'{T_POSTINGS}("term", "impact" DESC, "doc_id")')
+            f'{T_POSTINGS}("term", "impact_fx" DESC, "doc_id")')
         store.execute(
             f'CREATE INDEX idx_termstats_term ON {T_TERMSTATS}("term")')
         if docs is not None:
@@ -1133,6 +1156,9 @@ def export_search_store_incremental(
             )
         if T_MANIFEST not in tables:
             return _full("full_initial", None)
+        if "impact_fx" not in store.columns(T_POSTINGS):
+            # postings in an older format: rewrite them all
+            return _full("full_refresh", None)
         old_pins = store.manifest()
         if old_pins == new_pins:
             return {"mode": "noop", "drift": 0.0, "affected_terms": 0,
@@ -1219,18 +1245,8 @@ def export_search_store_incremental(
     ).select("doc_id", "dl")
 
     def _impacts(rows):
-        return (
-            rows.join(F.broadcast(termstats_aff.select("term", "idf")),
-                      "term")
-            .join(doclens, "doc_id")
-            .select(
-                "term", "doc_id", "tf",
-                bm25_term_score(
-                    F.col("tf"), F.col("dl"), F.lit(avgdl_new),
-                    F.col("idf"), k1, b,
-                ).alias("impact"),
-            )
-        )
+        return _posting_impacts(rows, termstats_aff, doclens, avgdl_new,
+                                k1, b)
 
     # whole lists for the drifted (rare) terms
     impacts_rec = _impacts(

@@ -1,5 +1,5 @@
-"""Measure the r16 serving-store bm25 pruning (impact-ordered early
-termination) at the 50k clone — VERDICT r15 #5.
+"""Measure the serving-store bm25 pruning (impact-ordered early
+termination) and its dispatch at the 50k clone.
 
 Two regimes, both reported because they bracket real corpora:
 
@@ -17,11 +17,18 @@ Two regimes, both reported because they bracket real corpora:
 Every timed request is asserted equal to the exhaustive full-scan form
 (_bm25_full) — the equality is the point, the speed is the reward.
 
+Each regime also reports the per-phase split of the public bm25()
+requests ("phase_ms_per_req"): the store statements each request ran,
+timed and classed by their SQL shape — the dispatch lookup, the
+per-term probes, the capped leg counts, the θ-refine, the pruned
+final re-score, and the full scan.
+
 Usage:
   python scripts/measure_bm25_pruning.py [clone_dir] [work_dir]
   (defaults /tmp/mdls_scale/sf1.0, /tmp/mdls_scale/storeopt; build the
-  clone first with scripts/make_scale_clone.py. The stock store is
-  reused if present, the zipf store is built on first run.)
+  clone first with scripts/make_scale_clone.py. Indexes and stores are
+  reused when present; a store exported in an older format, without
+  the impact_fx column, is exported again.)
 """
 
 from __future__ import annotations
@@ -40,6 +47,8 @@ from medallion_data_lake_spark.operators.inverted_index import (  # noqa: E402
     create_bm25_index,
 )
 from medallion_data_lake_spark.serving_store import (  # noqa: E402
+    T_POSTINGS,
+    T_TERMSTATS,
     ServingStore,
     export_search_store,
 )
@@ -49,11 +58,49 @@ N_REQ = 60
 
 
 def ensure_store(spark, docs, root, url) -> None:
-    if os.path.exists(root):
-        return
-    create_bm25_index(spark, docs, root, n_files=32)
-    export_search_store(spark, root, url.replace(";create=false",
-                                                 ";create=true"))
+    """Build the index if absent; export the store unless it already
+    carries fixed-point impacts."""
+    if not os.path.exists(root):
+        create_bm25_index(spark, docs, root, n_files=32)
+    with ServingStore(spark, url) as store:
+        if "impact_fx" in store.columns(T_POSTINGS):
+            return
+    export_search_store(spark, root, url)
+
+
+def _phase(sql: str) -> str:
+    """The bm25 phase a store statement belongs to, from its shape."""
+    if T_TERMSTATS in sql:
+        return "dispatch"
+    if sql.startswith("SELECT COUNT(*) FROM ("):
+        return "count"
+    if 'WHERE p."term" = ?' in sql:
+        return "probe"
+    if "VALUES" in sql:
+        return "refine"
+    if " cand, " in sql:
+        return "pruned_final"
+    return "full_scan"
+
+
+class PhaseTimer:
+    """Wraps a store's ``query`` to total wall time per bm25 phase."""
+
+    def __init__(self, store: ServingStore):
+        self.ms: dict[str, float] = {}
+        self.on = False
+        inner = store.query
+
+        def timed(sql, *a, **kw):
+            t0 = time.perf_counter()
+            try:
+                return inner(sql, *a, **kw)
+            finally:
+                if self.on:
+                    p = _phase(sql)
+                    self.ms[p] = (self.ms.get(p, 0.0)
+                                  + 1000 * (time.perf_counter() - t0))
+        store.query = timed
 
 
 def bench_requests(store: ServingStore, cases: list[tuple[list[str], int]],
@@ -61,6 +108,7 @@ def bench_requests(store: ServingStore, cases: list[tuple[list[str], int]],
     """p50/p95 of the public bm25() (pruned-with-fallback) vs the
     forced full scan, same request mix, with inline equality asserts."""
     store.bm25_stats = {"pruned": 0, "full": 0}
+    phases = PhaseTimer(store)
     # warm both statement families once (compile amortization is part
     # of the design; report warm latencies like every store table here)
     for terms, k in cases:
@@ -70,9 +118,11 @@ def bench_requests(store: ServingStore, cases: list[tuple[list[str], int]],
     t_auto, t_full = [], []
     for i in range(n_req):
         terms, k = cases[i % len(cases)]
+        phases.on = True
         t0 = time.time()
         a = store.bm25(terms, k=k)
         t_auto.append(time.time() - t0)
+        phases.on = False
         t0 = time.time()
         b = store._bm25_full(sorted(set(terms)), k)
         t_full.append(time.time() - t0)
@@ -87,6 +137,8 @@ def bench_requests(store: ServingStore, cases: list[tuple[list[str], int]],
         "p50_full_ms": round(1000 * statistics.median(t_full), 1),
         "p95_full_ms": round(1000 * t_full[int(0.95 * len(t_full)) - 1], 1),
         "mode_counts": dict(store.bm25_stats),
+        "phase_ms_per_req": {p: round(v / n_req, 1)
+                             for p, v in sorted(phases.ms.items())},
     }
 
 
@@ -106,16 +158,9 @@ def main() -> None:
 
     # -- (a) stock clone store: all-stopword vocabulary ------------------
     stock_root = os.path.join(work, "bm25idx")
-    stock_url = f"jdbc:derby:{work}/servingdb;create=false"
+    stock_url = f"jdbc:derby:{work}/servingdb;create=true"
     ensure_store(spark, docs, stock_root, stock_url)
     with ServingStore(spark, stock_url) as store:
-        # the r16 impact index may predate this store; create if absent
-        try:
-            store.execute(
-                'CREATE INDEX idx_postings_impact ON '
-                'mdls_postings("term", "impact" DESC, "doc_id")')
-        except Exception:
-            pass
         stock_cases = [
             (["stream"], 10), (["join", "hash"], 10),
             (["vector", "small", "table"], 10), (["window"], 10),
@@ -137,7 +182,7 @@ def main() -> None:
         ),
     )
     zipf_root = os.path.join(work, "bm25idx_zipf")
-    zipf_url = f"jdbc:derby:{work}/servingdb_zipf;create=false"
+    zipf_url = f"jdbc:derby:{work}/servingdb_zipf;create=true"
     ensure_store(spark, zdocs, zipf_root, zipf_url)
     with ServingStore(spark, zipf_url) as store:
         zipf_cases = [

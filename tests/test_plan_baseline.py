@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import json
 import os
+from contextlib import contextmanager
 
 import pytest
 
@@ -31,6 +32,31 @@ BASELINE_FILE = os.path.join(
 # fingerprints are sf-independent (data paths are normalized out;
 # proven by test_bench_fingerprint.py) — build on the smallest fixture
 SF = "/root/testdata/sf0.001"
+# The spread loader (catalog.load_star_table_spread) repartitions to the
+# session's default parallelism, and the optimizer drops a later
+# coalesce(n) only when n is at least that count — so at 32 cores
+# media_decode_features keeps a coalesce(8) node it loses at 4 or 8.
+# The baseline plans are built at one fixed parallelism (the
+# fingerprint already ignores the repartition count itself).
+BASELINE_PARALLELISM = 8
+
+
+@contextmanager
+def pinned_parallelism(spark, n: int):
+    """Run the block with ``spark.default.parallelism`` set to ``n`` —
+    the live SparkContext reads it on every ``defaultParallelism``
+    call — and restore the previous setting after."""
+    conf = spark.sparkContext._jsc.sc().conf()
+    key = "spark.default.parallelism"
+    old = conf.get(key) if conf.contains(key) else None
+    conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        if old is None:
+            conf.remove(key)
+        else:
+            conf.set(key, old)
 
 
 def _current_fps(spark) -> dict[str, str]:
@@ -41,10 +67,11 @@ def _current_fps(spark) -> dict[str, str]:
     # query's own code (observed via tests/test_serving.py's cached
     # gold tables drifting all documents/embeddings-based fps)
     spark.catalog.clearCache()
-    return {
-        name: plan_fingerprint(spec.build(spark, SF))
-        for name, spec in sorted(load_all_extra().items())
-    }
+    with pinned_parallelism(spark, BASELINE_PARALLELISM):
+        return {
+            name: plan_fingerprint(spec.build(spark, SF))
+            for name, spec in sorted(load_all_extra().items())
+        }
 
 
 def test_plans_match_committed_baseline(spark):

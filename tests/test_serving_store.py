@@ -2,10 +2,10 @@
 
 Contract under test:
 - store BM25 results equal the lake's ``bm25_search`` at the exported
-  snapshot — ids and match counts exactly, scores to double tolerance
-  (the store sums per-term doubles through the same decimal(28,12)
-  cast; Derby's decimal CAST truncates where Spark rounds, so the last
-  place can differ by 1e-12);
+  snapshot bit for bit — ids, match counts and scores (the store sums
+  fixed-point BIGINT impacts, the lake's decimal(28,12) impacts
+  x 10^12, so its integer sum is the lake's decimal sum exactly), on
+  the pruned path as on the full scan, including doc_id tie-breaks;
 - the store is a consistency LEASE: lake appends after export are
   invisible — store results keep matching the lake AT THE PINS;
 - gold exports roundtrip and serve indexed point/top-k lookups;
@@ -58,9 +58,7 @@ def _lake_rows(df):
 def _assert_store_equals_lake(store_out, lake_rows):
     assert store_out["columns"] == ["doc_id", "n_terms_matched", "score"]
     got = [tuple(r) for r in store_out["rows"]]
-    assert [g[:2] for g in got] == [l[:2] for l in lake_rows]
-    for g, l in zip(got, lake_rows):
-        assert abs(g[2] - l[2]) < 1e-9, (g, l)
+    assert got == [tuple(l) for l in lake_rows]
 
 
 def test_store_bm25_equals_lake_at_snapshot(spark, tmp_path, derby_url):
@@ -304,9 +302,7 @@ def test_store_hybrid_equals_lake(spark, tmp_path, derby_url):
                                            k=5, n_per_branch=6).collect()]
             got = [tuple(r) for r in store.hybrid(terms, q, k=5,
                                                   n_per_branch=6)["rows"]]
-            assert [g[:3] for g in got] == [l[:3] for l in lake], (terms, q)
-            for g, l in zip(got, lake):
-                assert abs(g[3] - l[3]) < 1e-15, (g, l)
+            assert got == lake, (terms, q)
 
 
 def test_store_new_routes_run_no_spark_job(spark, tmp_path, derby_url):
@@ -876,54 +872,194 @@ def test_full_fallback_forwards_stale_vector_waiver(spark, tmp_path,
 
 
 def test_store_bm25_pruned_equals_full(spark, tmp_path, derby_url):
-    """The r16 pruned probe-and-cut path is EXACT: for every (terms, k)
-    the public bm25() answer equals the exhaustive full-scan form
-    bit-for-bit (both evaluate the same Derby decimal arithmetic; the
+    """The pruned probe-and-cut path is EXACT: for every (terms, k) the
+    public bm25() answer equals the exhaustive full-scan form and the
+    lake bit for bit (both sum the same fixed-point impacts; the
     pruned path only restricts WHICH docs are re-scored, and its
-    post-hoc m*c < s_k check proves the restriction lossless). Skewed
+    post-hoc bound proves the restriction lossless). Skewed
     vocabulary: rare selective terms (pruning wins), one stopword on
     every doc (cut overflow -> provable-exact fallback)."""
+    n = 400
     rows = []
-    for i in range(1, 81):
-        words = ["common"] * (1 + i % 3)       # on every doc, df=80
+    for i in range(1, n + 1):
+        words = ["common"] * (1 + i % 3)       # on every doc
         if i % 11 == 0:
-            words += ["rare"] * 3              # df=7, high impact
+            words += ["rare"] * (1 + i % 4)    # high impact
         if i % 5 == 0:
-            words += ["medium"] * (1 + i % 2)  # df=16
+            words += ["medium"] * (1 + i % 2)
         if i % 7 == 0:
-            words += ["seven"]                 # df=11
+            words += ["seven"]
         words += [f"filler{i}", f"pad{i % 13}"] * (1 + i % 4)
         rows.append((i, " ".join(words)))
     root = str(tmp_path / "idx")
     create_bm25_index(spark, _docs(spark, rows), root, n_files=2)
     url = derby_url.format("pruned")
-    export_search_store(spark, root, url)
+    pins = export_search_store(spark, root, url)
 
+    cases = [
+        (["rare"], 3), (["rare", "medium"], 5),
+        (["medium", "seven"], 10), (["rare", "common"], 5),
+        (["common"], 10),
+        (["rare", "medium", "seven", "common"], 8),
+        (["medium"], n // 5),         # k == full df: < k-proof edge
+        (["nosuchterm", "rare"], 3), (["nosuchterm"], 5),
+    ]
     with ServingStore(spark, url) as store:
-        # the fixture is far below the production df dispatch threshold
-        # (pruning exists for terms with LONG posting lists); drop it so
-        # the pruned machinery actually runs here
-        store.PRUNE_MIN_DF = 0
-        cases = [
-            (["rare"], 3), (["rare", "medium"], 5),
-            (["medium", "seven"], 10), (["rare", "common"], 5),
-            (["common"], 10),
-            (["rare", "medium", "seven", "common"], 8),
-            (["medium"], 16),            # k == full df: < k-proof edge
-            (["nosuchterm", "rare"], 3), (["nosuchterm"], 5),
-        ]
+        # pruning is tried only when the terms' posting mass exceeds
+        # what an attempt can touch, which the default candidate cap
+        # puts far above this fixture; a smaller cap lowers that bound
+        # so the pruned machinery actually runs here
+        store.PRUNE_CAND_CAP = 32
         for terms, k in cases:
             got = store.bm25(terms, k=k)
             full = store._bm25_full(sorted(set(terms)), k)
             assert got["columns"] == full["columns"], terms
             assert got["rows"] == full["rows"], (terms, k)
+            lake = _lake_rows(bm25_search(spark, root, terms, k=k,
+                                          pins=pins))
+            _assert_store_equals_lake(got, lake)
         assert store.bm25_stats["pruned"] > 0, store.bm25_stats
         assert store.bm25_stats["full"] > 0, store.bm25_stats
         # force the candidate-cap overflow fallback and re-check
-        store.PRUNE_CAND_CAP = 4
+        store.PRUNE_CAND_CAP = 1
+        pruned = store.bm25_stats["pruned"]
         for terms, k in cases:
             got = store.bm25(terms, k=k)
             full = store._bm25_full(sorted(set(terms)), k)
-            assert got["rows"] == full["rows"], ("cap4", terms, k)
-        # with cap 4 every cut overflows -> all answered by the full scan
-        assert store.last_bm25_mode == "full"
+            assert got["rows"] == full["rows"], ("cap1", terms, k)
+        # with cap 1 every cut overflows -> all answered by the full scan
+        assert store.bm25_stats["pruned"] == pruned, store.bm25_stats
+
+
+def test_store_bm25_tie_at_kth_place(spark, tmp_path, derby_url):
+    """Identical documents tie in score across the k-th place: the
+    pruned answer, the full scan and the lake must keep the SAME tied
+    docs — the lowest doc_ids — with bit-identical scores."""
+    rows = []
+    for i in range(1, 241):
+        if i % 20 == 0:                      # 12 identical docs
+            text = "tie tie zed"
+        elif i in (7, 113, 229):             # 3 docs above the tie
+            text = "tie tie tie zed"
+        else:                                # long, low-impact docs
+            text = "tie zed " + " ".join(f"f{i}x{j}" for j in range(8))
+        rows.append((i, text))
+    root = str(tmp_path / "idx")
+    create_bm25_index(spark, _docs(spark, rows), root, n_files=2)
+    url = derby_url.format("tie")
+    pins = export_search_store(spark, root, url)
+
+    with ServingStore(spark, url) as store:
+        store.PRUNE_CAND_CAP = 16  # forces the pruned attempt here
+        for terms in (["tie"], ["tie", "zed"]):
+            k = 6  # places 4-6 fall inside the 12-way tie
+            got = store.bm25(terms, k=k)
+            assert store.last_bm25_mode == "pruned", terms
+            full = store._bm25_full(sorted(terms), k)
+            lake = _lake_rows(bm25_search(spark, root, terms, k=k,
+                                          pins=pins))
+            assert got["rows"] == full["rows"], terms
+            _assert_store_equals_lake(got, lake)
+            assert [r[0] for r in got["rows"]] == [7, 113, 229, 20, 40, 60]
+            assert len({r[2] for r in got["rows"][3:]}) == 1  # a real tie
+
+
+def _to_old_format(store):
+    """Rewrite an exported store's postings into the format exported
+    before fixed-point impacts: a DOUBLE ``impact`` column."""
+    store.execute("DROP INDEX idx_postings_term")
+    store.execute("DROP INDEX idx_postings_impact")
+    store.execute('ALTER TABLE mdls_postings DROP COLUMN "impact_fx"')
+    store.execute('ALTER TABLE mdls_postings ADD COLUMN "impact" DOUBLE')
+
+
+def test_old_format_store_is_refused(spark, tmp_path, derby_url):
+    root = str(tmp_path / "idx")
+    create_bm25_index(spark, _docs(spark), root, n_files=2)
+    url = derby_url.format("oldfmt")
+    export_search_store(spark, root, url)
+    with ServingStore(spark, url) as store:
+        _to_old_format(store)
+    with ServingStore(spark, url) as store:
+        with pytest.raises(ValueError, match="impact_fx.*re-export"):
+            store.bm25(["stream"], k=3)
+
+
+def test_incremental_export_rewrites_old_format_store(spark, tmp_path,
+                                                      derby_url):
+    """An old-format store takes the increment's full_refresh path —
+    even with no lake change, which would otherwise be a noop."""
+    from medallion_data_lake_spark.serving_store import (
+        export_search_store_incremental,
+    )
+
+    root = str(tmp_path / "idx")
+    create_bm25_index(spark, _docs(spark), root, n_files=2)
+    url = derby_url.format("oldinc")
+    export_search_store(spark, root, url)
+    with ServingStore(spark, url) as store:
+        _to_old_format(store)
+    rep = export_search_store_incremental(spark, root, url)
+    assert rep["mode"] == "full_refresh"
+    with ServingStore(spark, url) as store:
+        lake = _lake_rows(bm25_search(
+            spark, root, ["stream", "join"], k=6, pins=rep["pins"]))
+        _assert_store_equals_lake(store.bm25(["stream", "join"], k=6),
+                                  lake)
+
+
+class _FailingStore:
+    """A stand-in store whose /search raises ``exc``."""
+
+    def __init__(self, exc):
+        self.exc = exc
+
+    def routes(self):
+        return {"/search"}
+
+    def bm25(self, terms, k=10):
+        raise self.exc
+
+
+def test_http_status_separates_request_errors_from_faults(spark):
+    """400 for a request error, 500 for a server fault (e.g. the
+    store's JDBC connection failing), and the server keeps serving."""
+    import json as _json
+    from urllib.error import HTTPError
+    from urllib.request import Request, urlopen
+
+    from py4j.protocol import Py4JError
+
+    from medallion_data_lake_spark.serving import ServingLayer
+    from medallion_data_lake_spark.serving_http import (
+        serve_http_background,
+    )
+
+    def status(base, path, body):
+        r = Request(f"{base}{path}", data=body,
+                    headers={"Content-Type": "application/json"})
+        try:
+            return urlopen(r).status
+        except HTTPError as e:
+            assert "error" in _json.loads(e.read())
+            return e.code
+
+    search = _json.dumps({"terms": ["x"]}).encode()
+    for exc, want in ((ValueError("bad terms"), 400),
+                      (KeyError("k"), 400),
+                      (TypeError("not a list"), 400),
+                      (Py4JError("store connection lost"), 500),
+                      (RuntimeError("internal"), 500)):
+        server, _ = serve_http_background(ServingLayer(spark),
+                                          serving_store=_FailingStore(exc))
+        host, port = server.server_address
+        base = f"http://{host}:{port}"
+        try:
+            assert status(base, "/search", search) == want, exc
+            # an unparsable body and an unknown table are request errors
+            assert status(base, "/search", b"{not json") == 400
+            assert status(base, "/query", _json.dumps(
+                {"sql": "SELECT * FROM no_such_table"}).encode()) == 400
+        finally:
+            server.shutdown()
+            server.server_close()
