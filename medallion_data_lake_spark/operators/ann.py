@@ -51,6 +51,7 @@ partition.
 
 from __future__ import annotations
 
+import logging
 import math
 
 from pyspark.sql import Column, DataFrame
@@ -902,16 +903,24 @@ def load_semantic_codebook(
 ):
     """Load a codebook persisted by :func:`fit_semantic_codebook`,
     validating provenance: ``expect_dim`` is checked against the
-    centroids themselves (works even for pre-provenance codebooks);
-    ``expect_embedder`` against the sidecar's recorded fingerprint.
-    Mismatch raises ValueError — a codebook from a different embedding
-    space partitions this one arbitrarily, so assignments would be
-    noise while looking like successful dedup."""
+    centroids themselves; ``expect_embedder`` against the sidecar's
+    recorded fingerprint. Mismatch raises ValueError — a codebook from
+    a different embedding space partitions this one arbitrarily, so
+    assignments would be noise while looking like successful dedup. A
+    codebook without the ``provenance.json`` sidecar (an older on-disk
+    format) is refused: its embedding space cannot be checked."""
     import json
     import os
 
     from pyspark.ml.clustering import KMeansModel
 
+    prov_path = os.path.join(path, _PROVENANCE_FILE)
+    if not os.path.exists(prov_path):
+        raise ValueError(
+            f"semantic codebook at {path} has no {_PROVENANCE_FILE} "
+            "(an older on-disk format whose embedding space cannot be "
+            "checked). Refit it with fit_semantic_codebook."
+        )
     model = KMeansModel.load(path)
     actual_dim = int(len(model.clusterCenters()[0]))
     if expect_dim is not None and actual_dim != int(expect_dim):
@@ -919,8 +928,7 @@ def load_semantic_codebook(
             f"semantic codebook at {path} was fit on dim={actual_dim} "
             f"vectors but the pipeline embeds at dim={expect_dim}"
         )
-    prov_path = os.path.join(path, _PROVENANCE_FILE)
-    if expect_embedder is not None and os.path.exists(prov_path):
+    if expect_embedder is not None:
         with open(prov_path) as fh:
             meta = json.load(fh)
         recorded = meta.get("embedder")
@@ -1821,12 +1829,7 @@ def run_index_append_stream(
         if batch.isEmpty():
             return
         if compact_tombstones_over:
-            try:
-                t = read_tombstones(spark, index_path)
-                if t is not None and t.count() > compact_tombstones_over:
-                    compact_index_tombstones(spark, index_path)
-            except Exception:
-                pass  # ledger is durable; compaction retries next batch
+            _compact_tombstones_over(spark, index_path, compact_tombstones_over)
         append_index_batch(batch, index_path, bid, vec_col, id_col)
         if not health_every_batches:
             return
@@ -1835,7 +1838,11 @@ def run_index_append_stream(
                 persist_index_health(spark, index_path,
                                      sample_n=health_sample_n)
             except Exception:
-                pass  # batch already landed; telemetry is best-effort
+                # batch already landed; telemetry is best-effort
+                logging.getLogger(__name__).warning(
+                    "index health on %s failed (batch %d landed)",
+                    index_path, bid, exc_info=True,
+                )
 
     writer = stream.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint
@@ -1904,6 +1911,22 @@ def read_tombstones(spark, index_path: str):
         return None
     df = spark.read.parquet(tp).select("vec_id").distinct()
     return df
+
+
+def _compact_tombstones_over(spark, index_path: str, over: int) -> None:
+    """The stream hooks' compaction step: compact when the ledger holds
+    more than ``over`` ids. Best-effort — the ledger is durable, so a
+    failure is logged and the next batch retries; it never fails the
+    batch."""
+    try:
+        t = read_tombstones(spark, index_path)
+        if t is not None and t.count() > over:
+            compact_index_tombstones(spark, index_path)
+    except Exception:
+        logging.getLogger(__name__).warning(
+            "tombstone compaction on %s failed; retrying next batch",
+            index_path, exc_info=True,
+        )
 
 
 def _mask_tombstones(indexed: DataFrame, tombstones, key: str = "vec_id") -> DataFrame:
@@ -2022,14 +2045,8 @@ def run_index_delete_stream(
         if batch.isEmpty():
             return
         delete_index_batch(batch, index_path, bid, id_col)
-        if not compact_over:
-            return
-        try:
-            t = read_tombstones(spark, index_path)
-            if t is not None and t.count() > compact_over:
-                compact_index_tombstones(spark, index_path)
-        except Exception:
-            pass  # ledger is durable; compaction retries next batch
+        if compact_over:
+            _compact_tombstones_over(spark, index_path, compact_over)
 
     writer = stream.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint

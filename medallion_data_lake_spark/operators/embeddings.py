@@ -139,14 +139,10 @@ def materialize_corpus_embeddings(
     vectors from a different embedder would silently poison every
     consumer).
 
-    Legacy tables materialized before the fingerprint column exist
-    without ``text_fp``; for those the increment falls back to id-only
-    (stale texts are NOT detected) and the result flags it with
-    ``stale_checked=False`` — re-materialize into a fresh table to get
-    the full contract.
+    A table without the ``text_fp`` column (an older on-disk format)
+    is refused: an id-only increment cannot detect stale texts.
 
-    Returns {"n_embedded", "n_total", "version", "embedder", "dim",
-    "stale_checked"}.
+    Returns {"n_embedded", "n_total", "version", "embedder", "dim"}.
     """
     import json
     import os
@@ -162,8 +158,6 @@ def materialize_corpus_embeddings(
         text_fingerprint(text_col).alias("text_fp"),
     )
     todo = docs_fp
-    stale_checked = True
-    use_merge = False
     if existing_version is not None:
         if not os.path.exists(sidecar):
             # a version-bearing table with no provenance cannot prove
@@ -189,17 +183,15 @@ def materialize_corpus_embeddings(
                 "every consumer; use a new table or re-materialize"
             )
         existing = read_table(spark, table)
-        if "text_fp" in existing.columns:
-            have = existing.select(
-                F.col("vec_id").alias(id_col), "text_fp"
+        if "text_fp" not in existing.columns:
+            raise ValueError(
+                f"embeddings table at {table} has no text_fp column (an "
+                "older on-disk format whose stale vectors cannot be "
+                "detected). Re-materialize into a new table."
             )
-            todo = docs_fp.join(have, [id_col, "text_fp"], "left_anti")
-            use_merge = True  # changed ids must REPLACE their old row
-        else:
-            have = existing.select(F.col("vec_id").alias(id_col))
-            todo = docs_fp.join(have, id_col, "left_anti")
-            stale_checked = False
-        n_existing = have.count()  # pruned 1-2 column scan
+        have = existing.select(F.col("vec_id").alias(id_col), "text_fp")
+        todo = docs_fp.join(have, [id_col, "text_fp"], "left_anti")
+        n_existing = have.count()  # pruned 2-column scan
     else:
         # sidecar BEFORE the first commit: a crash between commit and a
         # trailing sidecar write would leave exactly the unverifiable
@@ -214,13 +206,7 @@ def materialize_corpus_embeddings(
         F.col(id_col).alias("vec_id"),
         text_embedder(dim)(F.col(text_col)).alias("embedding"),
         "text_fp",
-    )
-    if not stale_checked:
-        # legacy table: keep its (vec_id, embedding) schema — a mixed
-        # table where only some rows carry text_fp would make the
-        # staleness anti-join half-blind while looking armed
-        new = new.drop("text_fp")
-    new = new.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     n_new = new.count()
     version = existing_version
     if existing_version is None:
@@ -232,30 +218,21 @@ def materialize_corpus_embeddings(
         )
         version = res["version"] if isinstance(res, dict) else res
     elif n_new > 0:
-        if use_merge:
-            # updates replace existing rows; only genuinely-new ids
-            # grow the table (one small job over the checkpointed
-            # batch — never a post-commit full-table count, which the
-            # r13 shape avoided and a per-micro-batch caller can't
-            # afford)
-            n_updates = new.join(
-                have.select(F.col(id_col).alias("_hid")),
-                new["vec_id"] == F.col("_hid"),
-            ).count()
-            res = merge_into(spark, table, new, key="vec_id")
-        else:
-            n_updates = 0
-            res = commit(
-                new, table, mode="append",
-                stats_cols=("vec_id",), bloom_cols=("vec_id",),
-            )
+        # changed ids REPLACE their old row; only genuinely-new ids
+        # grow the table (one small job over the checkpointed batch —
+        # never a post-commit full-table count, which the r13 shape
+        # avoided and a per-micro-batch caller can't afford)
+        n_updates = new.join(
+            have.select(F.col(id_col).alias("_hid")),
+            new["vec_id"] == F.col("_hid"),
+        ).count()
+        res = merge_into(spark, table, new, key="vec_id")
         version = res["version"] if isinstance(res, dict) else res
     else:
         n_updates = 0
     return {"n_embedded": int(n_new),
             "n_total": int(n_existing + n_new - n_updates),
-            "version": version, "embedder": fp, "dim": dim,
-            "stale_checked": stale_checked}
+            "version": version, "embedder": fp, "dim": dim}
 
 
 def read_embedder_sidecar(table: str) -> dict | None:

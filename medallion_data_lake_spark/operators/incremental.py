@@ -151,10 +151,11 @@ def refresh_from_changes(
         else None
     )
     if current is not None and "_row_n" not in current.columns:
-        # legacy view from before row tracking: every stored group is
-        # known non-empty — bootstrap at 1 (the exact count is lost;
-        # from here on the signed deltas keep it right for new rows)
-        current = current.withColumn("_row_n", F.lit(1).cast("long"))
+        raise ValueError(
+            f"view at {view_path} has no _row_n column (an older on-disk "
+            "format without row tracking, so emptied groups cannot be "
+            "told apart). Rebuild it: refresh into a new view path."
+        )
     merged = merge_additive(current, delta, keys, metrics)
     # drop only groups whose LAST ROW is gone — zero-valued (or NULL)
     # metrics for still-populated groups survive, matching the

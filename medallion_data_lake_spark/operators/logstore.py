@@ -65,7 +65,7 @@ class LogStore:
         is delete + exclusive-create — NON-atomic: a concurrent reader
         can observe the file missing in the gap, so callers relying on
         this for metadata a reader may hold a listing of must tolerate
-        a transient miss (see ``versioned._read_checkpoint``)."""
+        a transient miss (see ``wap._txn_protection``)."""
         try:
             self.delete(file_path)
         except (FileNotFoundError, KeyError):

@@ -462,8 +462,7 @@ def commit_txn(
     try:
         for leg in norm:
             mark_staging_txn(
-                leg["table"], leg["staging_id"], txn_root, txn_id,
-                manifest_file=manifest_file,
+                leg["table"], leg["staging_id"], txn_id, manifest_file,
                 manifest=staged_manifests[leg["table"]],
             )
         # THE decision point: exclusive-create of the prepared manifest.

@@ -134,41 +134,58 @@ def _checkpoint_versions(path: str) -> list[int]:
     )
 
 
+#: every field a checkpoint carries; :func:`_read_checkpoint` refuses a
+#: checkpoint missing any of them
+_CKPT_FIELDS = frozenset(
+    {"live", "txns", "file_stats", "mixed_schema", "dv", "table_schema",
+     "column_mapping"}
+)
+
+
 def _read_checkpoint(path: str, version: int) -> dict:
-    """Read one checkpoint, tolerating the non-atomic replace window of
-    LogStore backends without atomic overwrite (the default ``replace``
-    is delete + exclusive-create): a reader that listed the checkpoint
-    just before an upgrader swapped it would otherwise crash on a file
-    that exists again milliseconds later. Brief retry, then raise — a
-    checkpoint that STAYS missing is real corruption and must be loud."""
-    target = os.path.join(_log_dir(path), f"{version:020d}.checkpoint.json")
-    store = get_log_store()
-    for attempt in range(5):
-        try:
-            return json.loads(store.read(target))
-        except (FileNotFoundError, KeyError):
-            if attempt == 4:
-                raise
-            time.sleep(0.05 * (attempt + 1))
+    """Read one checkpoint, refusing any that lacks a field of
+    ``_CKPT_FIELDS``: the resolvers take the newest checkpoint as the
+    complete base state and never walk the entries below it, so a
+    checkpoint missing a field would silently resolve that field wrong."""
+    ck = json.loads(get_log_store().read(
+        os.path.join(_log_dir(path), f"{version:020d}.checkpoint.json")
+    ))
+    missing = sorted(_CKPT_FIELDS - ck.keys())
+    if missing:
+        raise ValueError(
+            f"checkpoint {version} of versioned table {path} lacks "
+            f"field(s) {missing} (an older on-disk format). Rebuild the "
+            "table: read it with the code that wrote it and commit() the "
+            "rows to a new path."
+        )
+    return ck
+
+
+def _base_at(path: str, version: int | None) -> tuple[dict | None, list[dict]]:
+    """(newest checkpoint at/before ``version`` or None, the log entries
+    after it up to ``version``) — the base + tail every snapshot
+    resolver folds. ``version`` None = latest; negative = before the
+    first commit (no base, empty tail)."""
+    if version is not None and version < 0:
+        return None, []
+    ckpts = [
+        v for v in _checkpoint_versions(path)
+        if version is None or v <= version
+    ]
+    if not ckpts:
+        return None, _entries(path, hi=version)
+    return (
+        _read_checkpoint(path, ckpts[-1]),
+        _entries(path, lo=ckpts[-1] + 1, hi=version),
+    )
 
 
 def _state_at(path: str, version: int | None = None) -> tuple[list[str], dict]:
     """(live_files, txn_watermarks) at ``version`` (None = latest),
     resolved from the newest checkpoint at/before it plus the log tail —
     the read path the checkpoints exist for."""
-    if version is not None and version < 0:
-        return [], {}
-    ckpts = [
-        v for v in _checkpoint_versions(path)
-        if version is None or v <= version
-    ]
-    if ckpts:
-        ck = _read_checkpoint(path, ckpts[-1])
-        live, txns = list(ck["live"]), dict(ck.get("txns", {}))
-        tail = _entries(path, lo=ckpts[-1] + 1, hi=version)
-    else:
-        live, txns = [], {}
-        tail = _entries(path, hi=version)
+    ck, tail = _base_at(path, version)
+    live, txns = (list(ck["live"]), dict(ck["txns"])) if ck else ([], {})
     live = _replay(live, tail)
     for e in tail:
         t = e.get("txn")
@@ -181,18 +198,9 @@ def _mixed_schema_at(path: str, version: int | None = None) -> bool:
     """True when the snapshot's live files may span >1 schema (an
     evolved append landed at/before ``version``) — the reads must then
     pay mergeSchema. Resolved checkpoint + tail like everything else."""
-    if version is not None and version < 0:
-        return False
-    ckpts = [
-        v for v in _checkpoint_versions(path)
-        if version is None or v <= version
-    ]
-    mixed = False
-    lo = 0
-    if ckpts:
-        mixed = bool(_read_checkpoint(path, ckpts[-1]).get("mixed_schema"))
-        lo = ckpts[-1] + 1
-    for e in _entries(path, lo=lo, hi=version):
+    ck, tail = _base_at(path, version)
+    mixed = bool(ck and ck["mixed_schema"])
+    for e in tail:
         if e.get("unified_schema"):
             # a FULL-rewrite OPTIMIZE compacted every live file to the
             # union schema: single-schema again, mergeSchema off
@@ -218,21 +226,10 @@ def _dv_at(path: str, version: int | None = None) -> dict[str, list[int]]:
     vacuum-irrelevant) drops its vector with it; a restore adopts the
     TARGET version's vectors (the restored live set is the target's).
     Resolved checkpoint + tail like every other derived state."""
-    if version is not None and version < 0:
-        return {}
-    ckpts = [
-        v for v in _checkpoint_versions(path)
-        if version is None or v <= version
-    ]
-    if ckpts:
-        dv: dict[str, set[int]] = {
-            f: set(ps)
-            for f, ps in _read_checkpoint(path, ckpts[-1]).get("dv", {}).items()
-        }
-        tail = _entries(path, lo=ckpts[-1] + 1, hi=version)
-    else:
-        dv = {}
-        tail = _entries(path, hi=version)
+    ck, tail = _base_at(path, version)
+    dv: dict[str, set[int]] = {
+        f: set(ps) for f, ps in (ck["dv"] if ck else {}).items()
+    }
     for e in tail:
         if e.get("mode") == "restore" and e.get("restore_of") is not None:
             dv = {
@@ -275,60 +272,43 @@ def _apply_dvs(spark, df, path: str, files: list[str],
     return out
 
 
+def _logged_field(path: str, key: str, version: int | None = None):
+    """``key`` at ``version`` from the LOG + CHECKPOINTS alone (no
+    SparkSession, no parquet footers): the newest tail entry carrying
+    it, else the base checkpoint's (which carries every field — see
+    :func:`_read_checkpoint`). Returns ``(value, has_log)``: value is
+    None when nothing at/before ``version`` records the field, and
+    ``has_log`` tells a table with no commits there from one whose
+    entries never recorded it. Runs on every dtype and column-mapping
+    lookup, so it reads one checkpoint + the tail, never the whole log."""
+    ck, tail = _base_at(path, version)
+    for e in reversed(tail):
+        if e.get(key) is not None:
+            return e[key], True
+    return (ck[key] if ck else None), bool(ck or tail)
+
+
 def _table_schema_json_logged(path: str, version: int | None = None) -> dict | None:
-    """table_schema JSON at ``version`` from the LOG + CHECKPOINTS alone
-    (no SparkSession, no parquet footers): newest TAIL entry carrying
-    the field, else the newest prior checkpoint carrying it, else (for
-    pre-field legacy checkpoints only) the remaining entries below the
-    checkpoint, else None. Checkpoint + tail like every other resolver
-    — this runs on every dtype lookup, so it must not re-parse the
-    whole log when a checkpoint already folds the answer."""
-    ckpts = [
-        v for v in _checkpoint_versions(path)
-        if version is None or v <= version
-    ]
-    tail_lo = (ckpts[-1] + 1) if ckpts else 0
-    for e in reversed(_entries(path, lo=tail_lo, hi=version)):
-        if e.get("table_schema") is not None:
-            return e["table_schema"]
-    for cv in reversed(ckpts):
-        ts = _read_checkpoint(path, cv).get("table_schema")
-        if ts is not None:
-            return ts
-    if ckpts:  # legacy checkpoints without the field: full-walk fallback
-        for e in reversed(_entries(path, hi=ckpts[-1])):
-            if e.get("table_schema") is not None:
-                return e["table_schema"]
-    return None
+    """table_schema JSON at ``version`` (None when the table has no
+    commit at/before it). Every commit that creates or reshapes a
+    table records the field, so a log without it is an older on-disk
+    format: refused, never guessed from a data-file footer (a footer
+    holds one file's schema, not the table's union)."""
+    ts, has_log = _logged_field(path, "table_schema", version)
+    if ts is None and has_log:
+        raise ValueError(
+            f"versioned table at {path} has no recorded table_schema in "
+            "its log (an older on-disk format). Rebuild the table: read "
+            "it with the code that wrote it and commit() the rows to a "
+            "new path."
+        )
+    return ts
 
 
-#: every field a current-generation checkpoint carries; a checkpoint
-#: missing any of these was written by an older code generation and must
-#: be upgraded before the log below it is expired (the resolvers'
-#: legacy fallbacks walk the pre-checkpoint entries, which expire_log
-#: deletes)
-_CKPT_FIELDS = frozenset(
-    {"live", "txns", "file_stats", "mixed_schema", "dv", "table_schema",
-     "column_mapping"}
-)
-
-
-def _write_checkpoint(path: str, version: int, upgrade: bool = False) -> None:
+def _write_checkpoint(path: str, version: int) -> None:
     """Materialize derived state at ``version``. Best-effort: a racing
-    checkpointer (or a crash here) costs nothing but replay length.
-
-    ``upgrade=True`` (expire_log's path) additionally REPLACES a
-    pre-existing checkpoint that lacks any current field: exclusive-
-    create alone would keep a legacy (pre-table_schema) checkpoint
-    as-is, and once expire_log deletes the entries below it the
-    legacy full-walk fallbacks in ``_table_schema_json_logged`` /
-    ``_dv_at`` find nothing — the silent-downgrade regression the
-    field was added to fix would resurface on migrated tables. The
-    replace is atomic on backends that support it (``LogStore.replace``:
-    POSIX rename, in-memory swap); on the delete+create fallback a
-    reader in the gap retries (``_read_checkpoint``), and it only ever
-    runs while the full log below still exists, so even a crash in the
-    gap resolves from entries."""
+    checkpointer (or a crash here) costs nothing but replay length; an
+    existing checkpoint at ``version`` is kept."""
     live, txns = _state_at(path, version)
     stats = _file_stats_at(path, version)
     # resolve ALL derived state before the exclusive-create: the open()
@@ -336,13 +316,12 @@ def _write_checkpoint(path: str, version: int, upgrade: bool = False) -> None:
     # helpers would otherwise pick up and fail to parse
     mixed = _mixed_schema_at(path, version)
     dv = _dv_at(path, version)
-    # persist the table (union) schema so expire_log truncating the log
-    # to a schema-less tail (DML/OPTIMIZE entries are schema-neutral)
-    # can't silently downgrade _table_schema_at to a one-file footer
+    # persist the table (union) schema and column mapping so expire_log
+    # truncating the log to a schema-less tail (DML/OPTIMIZE entries are
+    # schema-neutral) still resolves both
     table_schema = _table_schema_json_logged(path, version)
     column_mapping = _column_mapping_at(path, version)
     target = os.path.join(_log_dir(path), f"{version:020d}.checkpoint.json")
-    store = get_log_store()
     payload = json.dumps(
         {"version": version, "live": live, "txns": txns,
          "file_stats": stats, "mixed_schema": mixed, "dv": dv,
@@ -350,20 +329,9 @@ def _write_checkpoint(path: str, version: int, upgrade: bool = False) -> None:
          "timestamp": time.time()},
     )
     try:
-        store.put_exclusive(target, payload)
+        get_log_store().put_exclusive(target, payload)
     except FileExistsError:
-        if not upgrade:
-            return
-        try:
-            existing = json.loads(store.read(target))
-        except Exception:
-            existing = {}
-        if _CKPT_FIELDS.issubset(existing):
-            return  # current-generation checkpoint; keep it
-        # atomic where the backend allows (POSIX rename / mutex swap);
-        # on backends with only the delete+create fallback, readers
-        # tolerate the gap via _read_checkpoint's retry
-        store.replace(target, payload)
+        return
 
 
 def latest_txn_version(path: str, app_id: str) -> int | None:
@@ -546,14 +514,10 @@ def _probe_lit(v, dtype=None):
 
 def _column_dtypes(spark, path: str, version: int | None = None) -> dict:
     """{column: DataType} of the table schema at ``version`` — what the
-    bloom probe sites need to render literals build-identically."""
-    try:
-        return {
-            f.name: f.dataType
-            for f in _table_schema_at(spark, path, version).fields
-        }
-    except Exception:
-        return {}  # schema unresolvable: fall back to native-lit probes
+    bloom probe sites need to render literals build-identically; empty
+    when the table has no commit at ``version``."""
+    schema = _table_schema_at(spark, path, version)
+    return {} if schema is None else {f.name: f.dataType for f in schema.fields}
 
 
 def _collect_bloom_filters(
@@ -638,19 +602,8 @@ def _bloom_may_contain(encoded: str, raw_hashes: list[int]) -> bool:
 def _file_stats_at(path: str, version: int | None = None) -> dict[str, dict]:
     """Per-file stats for the LIVE files at ``version`` — resolved from
     the newest checkpoint + tail like :func:`_state_at`."""
-    if version is not None and version < 0:
-        return {}
-    ckpts = [
-        v for v in _checkpoint_versions(path)
-        if version is None or v <= version
-    ]
-    if ckpts:
-        ck = _read_checkpoint(path, ckpts[-1])
-        stats = dict(ck.get("file_stats", {}))
-        tail = _entries(path, lo=ckpts[-1] + 1, hi=version)
-    else:
-        stats = {}
-        tail = _entries(path, hi=version)
+    ck, tail = _base_at(path, version)
+    stats = dict(ck["file_stats"]) if ck else {}
     for e in tail:
         stats.update(e.get("file_stats", {}))
     live, _ = _state_at(path, version)
@@ -1015,9 +968,12 @@ def read_table(
         # deleted rows (the unpinned-latest race clone_table pins against).
         version = lv
     files, _ = _state_at(path, version)
+    # resolved on every read, so a log that never recorded its schema
+    # is refused here rather than read through one file's footer
+    schema = _table_schema_at(spark, path, version)
     if not files:
         # a valid-but-empty snapshot (e.g. overwrite with 0 rows)
-        return spark.createDataFrame([], _table_schema_at(spark, path, version))
+        return spark.createDataFrame([], schema)
     reader = spark.read
     if _mixed_schema_at(path, version):
         # an evolved append landed in this snapshot: without mergeSchema
@@ -1227,30 +1183,20 @@ def read_table_pruned(
     return df, report
 
 
-def _schema_of_latest(spark, path, entries):
-    for e in reversed(entries):
-        if e.get("added"):
-            return spark.read.parquet(os.path.join(path, e["added"][0])).schema
-    raise ValueError(f"table {path} has no data files in any version")
-
-
 def _table_schema_at(spark, path, version=None):
     """The table's UNION schema at ``version`` (Delta's table-level
     schema, not any one file's): resolved from the most recent log
     entry carrying ``table_schema`` — commit() records the running
     union on every append/overwrite, rollback() the restored target's.
     Entries without the field (DML rewrites, OPTIMIZE — schema-neutral
-    by construction; pre-field legacy logs) are skipped in the reverse
-    walk; then checkpoints (which persist the running schema, so an
-    expire_log-truncated tail of schema-neutral entries still
-    resolves); a log with no recorded schema anywhere falls back to
-    the newest data file's footer (the pre-union behavior)."""
+    by construction) are skipped in the reverse walk; then the base
+    checkpoint, which persists the running schema. None when the table
+    has no commit at/before ``version``; a log that never recorded the
+    field is refused (:func:`_table_schema_json_logged`)."""
     from pyspark.sql.types import StructType
 
     ts = _table_schema_json_logged(path, version)
-    if ts is not None:
-        return StructType.fromJson(ts)
-    return _schema_of_latest(spark, path, _entries(path, hi=version))
+    return None if ts is None else StructType.fromJson(ts)
 
 
 def _table_schema_json_at(spark, path, version=None):
@@ -1287,25 +1233,9 @@ def _union_schema(base, new):
 def _column_mapping_at(path: str, version: int | None = None) -> dict:
     """{"map": {logical: physical (non-identity only)}, "retired":
     [physical, ...]} at ``version`` — newest entry carrying the field,
-    else newest prior checkpoint, else identity. Same checkpoint + tail
-    walk as ``_table_schema_json_logged``."""
-    ckpts = [
-        v for v in _checkpoint_versions(path)
-        if version is None or v <= version
-    ]
-    tail_lo = (ckpts[-1] + 1) if ckpts else 0
-    for e in reversed(_entries(path, lo=tail_lo, hi=version)):
-        if e.get("column_mapping") is not None:
-            return e["column_mapping"]
-    for cv in reversed(ckpts):
-        cm = _read_checkpoint(path, cv).get("column_mapping")
-        if cm is not None:
-            return cm
-    if ckpts:  # legacy checkpoints: walk the remaining entries below
-        for e in reversed(_entries(path, hi=ckpts[-1])):
-            if e.get("column_mapping") is not None:
-                return e["column_mapping"]
-    return {"map": {}, "retired": []}
+    else the base checkpoint's, else identity."""
+    cm, _ = _logged_field(path, "column_mapping", version)
+    return cm if cm is not None else {"map": {}, "retired": []}
 
 
 def _cm_is_identity(cm: dict) -> bool:
@@ -1773,7 +1703,7 @@ def vacuum(path: str, keep_last: int = 1, dry_run: bool = False) -> list[str]:
     for e in _entries(path):
         all_files.update(e.get("added", []))
     for cv in _checkpoint_versions(path):
-        all_files.update(_read_checkpoint(path, cv).get("live", []))
+        all_files.update(_read_checkpoint(path, cv)["live"])
     # never delete a file outside this table's directory: a shallow
     # clone (clone_table) references the SOURCE's files via ../ paths —
     # dereferencing them here is fine, physically deleting them would
@@ -1845,7 +1775,7 @@ def sweep_orphan_commit_dirs(
         for rel in e.get("added", []):
             referenced_dirs.add(rel.split(os.sep)[1])
     for cv in _checkpoint_versions(path):
-        for rel in _read_checkpoint(path, cv).get("live", []):
+        for rel in _read_checkpoint(path, cv)["live"]:
             parts = rel.split(os.sep)
             if len(parts) > 1:
                 referenced_dirs.add(parts[1])
@@ -1911,11 +1841,7 @@ def expire_log(path: str, keep_last: int = 1) -> dict:
     if not versions:
         return {"files_deleted": doomed, "entries_deleted": 0, "base": None}
     base = versions[-max(keep_last, 1):][0]
-    # upgrade=True: a legacy checkpoint at base (missing table_schema or
-    # other later-added fields) must be rewritten BEFORE the entries
-    # below it are deleted — its fallback resolution path is exactly
-    # those entries (see _write_checkpoint docstring)
-    _write_checkpoint(path, base, upgrade=True)  # makes base standalone
+    _write_checkpoint(path, base)  # makes base standalone
     dropped = 0
     store = get_log_store()
     for v in versions:

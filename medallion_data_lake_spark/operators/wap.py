@@ -436,19 +436,13 @@ def _txn_protection(m: dict) -> str | None:
         return None
     # the marker carries the coordinator's own manifest path ("file",
     # written by txn._txn_file) so this guard never re-derives the
-    # coordinator's naming scheme; legacy markers fall back — LAZILY,
-    # so a malformed marker missing both keys classifies as torn (the
-    # except arm below) instead of crashing the whole expire_staged
-    # maintenance sweep with a KeyError
+    # coordinator's naming scheme; a malformed marker without it
+    # classifies as torn (the except arm below) instead of crashing the
+    # whole expire_staged maintenance sweep with a KeyError
     from .logstore import get_log_store
 
     try:
-        target = (
-            marker["file"]
-            if "file" in marker
-            else os.path.join(marker["root"], f"{marker['id']}.json")
-        )
-        status = json.loads(get_log_store().read(target)).get("status")
+        status = json.loads(get_log_store().read(marker["file"])).get("status")
     except (FileNotFoundError, KeyError, ValueError):
         # manifest not there (yet) or torn mid-write (the base
         # LogStore.replace / put_exclusive windows): the mark-to-decide
@@ -464,14 +458,16 @@ def _txn_protection(m: dict) -> str | None:
 
 
 def mark_staging_txn(
-    path: str, staging_id: str, txn_root: str, txn_id: str,
-    manifest_file: str | None = None, manifest: dict | None = None,
+    path: str, staging_id: str, txn_id: str, manifest_file: str,
+    manifest: dict | None = None,
 ) -> None:
     """Stamp a staged manifest as a transaction leg (called by
     ``txn.commit_txn`` before its decision point) so maintenance
     (``expire_staged``) and manual ``abandon_staged`` refuse to destroy
-    the txn's redo state while the txn is live. ``manifest`` skips the
-    re-read when the caller already holds the parsed staging manifest."""
+    the txn's redo state while the txn is live. ``manifest_file`` is
+    the coordinator's manifest path, the one record of the txn's status
+    (``_txn_protection``); ``manifest`` skips the re-read when the
+    caller already holds the parsed staging manifest."""
     from ._atomic import atomic_write_json
 
     if manifest is not None and not os.path.exists(
@@ -488,12 +484,10 @@ def mark_staging_txn(
     m = manifest if manifest is not None else _read_manifest(path, staging_id)
     m.pop("age_sec", None)  # a list_staged()-shaped dict: display-only
     m["txn"] = {
-        "root": os.path.abspath(txn_root),
         "id": txn_id,
         "marked_at": time.time(),
+        "file": os.path.abspath(manifest_file),
     }
-    if manifest_file is not None:
-        m["txn"]["file"] = os.path.abspath(manifest_file)
     atomic_write_json(_manifest_path(path, staging_id), m)
     if not os.path.isdir(os.path.join(path, m["data_dir"])):
         # post-write re-verify closes the check-then-act race: a

@@ -34,10 +34,11 @@ endpoint is the form a real deployment fronts with any UI):
 Every response is bounded (S14): ``max_rows`` is clamped to
 ``ROW_CAP`` — the server never streams an unbounded collect to a
 browser, which is the failure mode the reference's trust-the-user
-LIMIT policy invites. Errors come back as JSON with an HTTP status —
-400 for a bad request (:data:`REQUEST_ERRORS`), 500 for a server
-fault — and a failed statement never kills the server (same contract
-as ``serve_repl``).
+LIMIT policy invites. Request bodies are bounded too: above
+:data:`MAX_BODY_BYTES` a POST answers 413 unread. Errors come back as
+JSON with an HTTP status — 400 for a bad request
+(:data:`REQUEST_ERRORS`), 500 for a server fault — and a failed
+statement never kills the server (same contract as ``serve_repl``).
 
 Concurrency: ``ThreadingHTTPServer`` + Spark's thread-safe
 ``spark.sql`` — concurrent requests become concurrent Spark jobs
@@ -60,6 +61,7 @@ from pyspark.errors import AnalysisException
 from .serving import ServingLayer
 
 ROW_CAP = 10_000  # absolute ceiling on rows per response (S14)
+MAX_BODY_BYTES = 1 << 20  # request bodies above this answer 413
 
 # exceptions that mean the REQUEST is wrong (bad body, unknown table or
 # column, unparsable SQL) — answered 400; anything else is a server
@@ -167,6 +169,15 @@ class _Handler(BaseHTTPRequestHandler):
         url = urlparse(self.path)
         try:
             length = int(self.headers.get("Content-Length", "0"))
+            # a negative length would read until the client closes (a
+            # blocked thread), a huge one would be buffered whole
+            if length < 0:
+                self._send(400, {"error": f"Content-Length {length} < 0"})
+                return
+            if length > MAX_BODY_BYTES:
+                self._send(413, {"error": f"request body of {length} bytes "
+                                 f"exceeds {MAX_BODY_BYTES}"})
+                return
             req = json.loads(self.rfile.read(length) or b"{}")
             if url.path == "/query":
                 sql = req.get("sql")

@@ -211,9 +211,7 @@ def _declared_fields(path: str, version: int | None,
                      columns: str | None = None):
     """(schema_json, [(logical, physical), ...]) at ``version`` —
     resolved from the LOG ONLY (checkpoint + tail walk; this source
-    never needs a SparkSession for metadata). Raises on tables whose
-    log predates schema recording: such tables re-record on their next
-    commit, and the JVM path (read_table) covers them meanwhile.
+    never needs a SparkSession for metadata).
 
     ``columns`` (comma-separated logical names) is the source's MANUAL
     projection pushdown: the Python Data Source API does no automatic
@@ -223,12 +221,7 @@ def _declared_fields(path: str, version: int | None,
     both the declared schema and the per-file parquet read."""
     schema_json = _table_schema_json_logged(path, version)
     if schema_json is None:
-        raise ValueError(
-            f"versioned table at {path} has no recorded table_schema in "
-            "its log (written by a pre-schema code generation). Read it "
-            "once with read_table / commit to it once to record the "
-            "schema, or use read_table for this table."
-        )
+        raise FileNotFoundError(f"no versioned table at {path}")
     if columns is not None:
         want = [c.strip() for c in columns.split(",") if c.strip()]
         have = {f["name"] for f in schema_json["fields"]}
@@ -855,18 +848,9 @@ class _LakeArrowWriterCore:
                 _table_schema_json_logged,
             )
 
+            # in either mode: refuses a log that never recorded its
+            # table_schema (an older on-disk format)
             logged = _table_schema_json_logged(path)
-            if logged is None:
-                # publishing the stream schema as authoritative over a
-                # pre-schema-recording log would silently NARROW the
-                # table's union schema (live files may carry columns
-                # the stream lacks) — same refusal as _declared_fields
-                raise ValueError(
-                    f"versioned table at {path} has no recorded "
-                    "table_schema in its log (pre-schema code "
-                    "generation); commit() to it once to record the "
-                    "schema before pointing the native sink at it."
-                )
             if self._mode == "append":
                 # early loud failure at stream START; re-checked
                 # against the fresh tip inside every commit
@@ -1024,13 +1008,12 @@ class _LakeArrowWriterCore:
                 logged = _table_schema_json_logged(
                     self._path, version - 1
                 )
-                if logged is not None:
-                    # THE shared drift rule, against the fresh tip
-                    table_schema, schema_changed = _check_append_drift(
-                        self._path, StructType.fromJson(logged),
-                        self._schema, self._allow_evolution,
-                        what=f"{self._kind} append",
-                    )
+                # THE shared drift rule, against the fresh tip
+                table_schema, schema_changed = _check_append_drift(
+                    self._path, StructType.fromJson(logged),
+                    self._schema, self._allow_evolution,
+                    what=f"{self._kind} append",
+                )
             removed = []
             if self._mode == "overwrite" and version > 0:
                 removed, _ = _state_at(self._path, version - 1)

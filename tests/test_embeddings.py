@@ -127,7 +127,7 @@ def test_materialize_reembeds_changed_text(spark, tmp_path):
         "doc_id long, text string")
     table = str(tmp_path / "emb")
     first = materialize_corpus_embeddings(spark, docs, table, dim=16)
-    assert first["n_embedded"] == 10 and first["stale_checked"] is True
+    assert first["n_embedded"] == 10
 
     # steady state: nothing to do
     again = materialize_corpus_embeddings(spark, docs, table, dim=16)
@@ -201,3 +201,30 @@ def test_null_text_doc_reaches_steady_state(spark, tmp_path):
     # the coverage guard passes (no phantom STALE row)
     curate_corpus(docs, config=CurationConfig(
         embedding_dim=16, embeddings_table=table))["curated"].collect()
+
+
+def test_materialize_refuses_table_without_text_fp(spark, tmp_path):
+    """An embeddings table without the text_fp column (the format
+    before text fingerprints) is refused by name: an id-only increment
+    cannot see that a document's text changed, so it would keep
+    serving the old vector."""
+    import json
+    import os
+
+    import pytest
+
+    from medallion_data_lake_spark.operators.embeddings import (
+        EMBEDDER_SIDECAR,
+        HASHING_EMBEDDER_FINGERPRINT,
+        materialize_corpus_embeddings,
+    )
+    from medallion_data_lake_spark.operators.versioned import commit
+
+    table = str(tmp_path / "emb")
+    commit(spark.createDataFrame(
+        [(0, [0.0] * 16)], "vec_id long, embedding array<float>"), table)
+    with open(os.path.join(table, EMBEDDER_SIDECAR), "w") as fh:
+        json.dump({"embedder": HASHING_EMBEDDER_FINGERPRINT, "dim": 16}, fh)
+    docs = spark.createDataFrame([(0, "some text")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="no text_fp column"):
+        materialize_corpus_embeddings(spark, docs, table, dim=16)

@@ -55,6 +55,24 @@ def test_fixture_matches_declared_schema(sf_dir, table):
         )
 
 
+@pytest.mark.parametrize("sf_dir", SF_DIRS)
+def test_customer_custkey_is_unique(sf_dir):
+    """customer.c_custkey is the table's primary key. customer_value_tiers
+    (queries/core.py) aggregates orders per o_custkey BEFORE joining
+    customer and relies on c_name/c_mktsegment being functionally
+    dependent on the key; with a duplicate key it would no longer match
+    the oracle's join-then-group form."""
+    import pyarrow.compute as pc
+
+    keys = pq.read_table(
+        os.path.join(sf_dir, "customer.parquet"), columns=["c_custkey"]
+    ).column("c_custkey")
+    assert keys.null_count == 0
+    assert pc.count_distinct(keys).as_py() == len(keys), (
+        f"{sf_dir}: duplicate c_custkey"
+    )
+
+
 def test_events_cache_key_sees_nested_rewrites(tmp_path):
     """The footer-cache freshness key must change when a data file
     nested inside a partition subdirectory is rewritten in place

@@ -253,3 +253,28 @@ def test_refresh_keeps_groups_that_net_to_zero(spark, tmp_path):
     assert refresh_from_changes(spark, src, view, **args) is not None
     state = {r["day"]: r["revenue"] for r in read_table(spark, view).collect()}
     assert state == {"d1": 0.0}
+
+
+def test_view_without_row_n_is_refused(spark, tmp_path):
+    """A view written before row tracking (no _row_n column) is refused
+    by name: without the row count an emptied group cannot be told from
+    one whose metrics net to zero, so a guessed count would keep wrong
+    groups."""
+    import pytest
+
+    from medallion_data_lake_spark.operators.incremental import (
+        refresh_from_changes,
+    )
+    from medallion_data_lake_spark.operators.versioned import commit
+
+    src = str(tmp_path / "src")
+    view = str(tmp_path / "view")
+    commit(spark.createDataFrame(
+        [(1, "d1", 10.0)], "id long, day string, amount double"), src)
+    commit(spark.createDataFrame([("d1", 10.0)], "day string, revenue double"),
+           view)
+    with pytest.raises(ValueError, match="no _row_n column"):
+        refresh_from_changes(
+            spark, src, view, grain_exprs={"day": F.col("day")},
+            value_exprs={"revenue": F.col("amount")},
+        )

@@ -326,3 +326,41 @@ def test_delete_coerces_plain_ids_to_index_dtype(spark, tmp_path):
     t = {r["vec_id"] for r in read_tombstones(spark, idx).collect()}
     assert t == {Decimal(str(v)) for v in victims}
     assert not (_hits(spark, idx, queries, n_probes=4, k=5) & set(victims))
+
+
+def test_failing_stream_maintenance_logs_and_batch_lands(
+    spark, tmp_path, monkeypatch, caplog
+):
+    """The append stream's maintenance hooks are best-effort but loud: a
+    compaction (or health) failure logs a warning with its traceback,
+    and the batch still lands; the ledger stays for the next retry."""
+    import logging
+
+    from medallion_data_lake_spark.operators import ann
+
+    emb = _emb(spark).filter(F.col("vec_id") < 8)
+    src = str(tmp_path / "src")
+    emb.write.parquet(f"{src}/d0")
+    idx = str(tmp_path / "idx")
+    init_streaming_ivf_index(idx, n_bits=MIN_BITS)
+    delete_from_index(spark, idx, emb.filter(F.col("vec_id") < 2))
+
+    def broken(*args, **kw):
+        raise OSError("simulated maintenance fault")
+
+    monkeypatch.setattr(ann, "compact_index_tombstones", broken)
+    monkeypatch.setattr(ann, "persist_index_health", broken)
+    stream = spark.readStream.schema(emb.schema).parquet(f"{src}/d*")
+    with caplog.at_level(logging.WARNING, logger=ann.__name__):
+        run_index_append_stream(
+            spark, stream, idx, str(tmp_path / "ck"),
+            health_every_batches=1, compact_tombstones_over=1,
+        )
+    warned = {
+        r.getMessage().split(" on ")[0] for r in caplog.records
+        if r.name == ann.__name__ and r.levelno == logging.WARNING
+        and r.exc_info is not None
+    }
+    assert warned == {"tombstone compaction", "index health"}
+    assert spark.read.parquet(idx).count() == 8  # the batch landed
+    assert read_tombstones(spark, idx).count() == 2  # ledger kept

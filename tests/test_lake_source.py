@@ -1016,3 +1016,23 @@ def test_restore_refuses_out_of_range(spark, tmp_path):
     expire_log(path, keep_last=1)
     with pytest.raises(ValueError, match="out of range"):
         rollback(spark, path, 0)
+
+
+def test_log_without_table_schema_is_refused(spark, tmp_path):
+    """The source resolves its declared schema from the log alone; a log
+    that never recorded table_schema (an older on-disk format) is
+    refused by name, by the same check read_table applies."""
+    import json
+
+    from medallion_data_lake_spark.operators.versioned import _log_dir
+
+    path = _mk(spark, tmp_path)
+    log = _log_dir(path)
+    for name in os.listdir(log):
+        e = json.load(open(os.path.join(log, name)))
+        e.pop("table_schema", None)
+        with open(os.path.join(log, name), "w") as fh:
+            json.dump(e, fh)
+    register_lake_source(spark)
+    with pytest.raises(Exception, match="no recorded table_schema"):
+        spark.read.format(FORMAT_NAME).load(path).collect()

@@ -193,20 +193,18 @@ def test_expire_log_keeps_evolved_schema_via_checkpoint(spark, tmp_path):
         )
 
 
-def test_expire_log_upgrades_legacy_checkpoint(spark, tmp_path):
-    """REGRESSION (r7 advice): _write_checkpoint is exclusive-create, so
-    a LEGACY checkpoint (written before the table_schema field existed)
-    at expire_log's base version used to survive as-is — and once the
-    entries below it were deleted, _table_schema_json_logged's legacy
-    full-walk fallback found nothing and schema resolution silently
-    degraded to the one-file footer. expire_log must upgrade such a
-    checkpoint (rewrite with current fields) BEFORE truncating."""
+def test_checkpoint_missing_a_field_is_refused(spark, tmp_path):
+    """A checkpoint without a field of _CKPT_FIELDS (the format written
+    before table_schema was recorded) is refused by name on every read,
+    and expire_log refuses before deleting any entry: the resolvers
+    never walk the entries below a checkpoint, so reading past one that
+    lacks a field would resolve that field wrong."""
     import json
     import os
 
     from medallion_data_lake_spark.operators.versioned import (
+        _commit_versions,
         _log_dir,
-        _table_schema_at,
         _write_checkpoint,
         delete_rows_dv,
         expire_log,
@@ -222,18 +220,47 @@ def test_expire_log_upgrades_legacy_checkpoint(spark, tmp_path):
     for key in (1, 2):  # schema-neutral tail (versions 2, 3)
         delete_rows_dv(spark, path, predicates={"id": (key, key)})
 
-    # simulate a migrated table: a pre-field checkpoint at the future
-    # base (version 2) — current payload with table_schema stripped
+    # an older-format checkpoint at version 2: table_schema stripped
     _write_checkpoint(path, 2)
     ck_file = os.path.join(_log_dir(path), f"{2:020d}.checkpoint.json")
-    legacy = json.load(open(ck_file))
-    del legacy["table_schema"]
+    old = json.load(open(ck_file))
+    del old["table_schema"]
     with open(ck_file, "w") as fh:
-        json.dump(legacy, fh)
+        json.dump(old, fh)
 
-    expire_log(path, keep_last=2)  # base=2; entries 0,1 are deleted
+    with pytest.raises(ValueError, match=r"lacks field\(s\) \['table_schema'\]"):
+        read_table(spark, path)
+    with pytest.raises(ValueError, match="table_schema"):
+        expire_log(path, keep_last=2)
+    assert _commit_versions(path) == [0, 1, 2, 3]  # nothing expired
 
-    upgraded = json.load(open(ck_file))
-    assert upgraded.get("table_schema") is not None  # rewritten in place
-    schema = _table_schema_at(spark, path)
-    assert [f.name for f in schema.fields] == ["id", "tag", "score"]
+
+def _strip_table_schema(log_dir):
+    """Rewrite every log entry under ``log_dir`` without table_schema."""
+    import json
+    import os
+
+    for name in os.listdir(log_dir):
+        f = os.path.join(log_dir, name)
+        e = json.load(open(f))
+        e.pop("table_schema", None)
+        with open(f, "w") as fh:
+            json.dump(e, fh)
+
+
+def test_log_without_table_schema_is_refused(spark, tmp_path):
+    """A log whose entries never recorded table_schema (the format
+    before union-schema recording) is refused by name instead of being
+    read through one data file's footer; a path with no log at all is
+    still just "no table"."""
+    from medallion_data_lake_spark.operators.versioned import (
+        _log_dir,
+        _table_schema_at,
+    )
+
+    path = str(tmp_path / "vt")
+    commit(spark.createDataFrame([(1, "a")], "id long, tag string"), path)
+    _strip_table_schema(_log_dir(path))
+    with pytest.raises(ValueError, match="no recorded table_schema"):
+        read_table(spark, path)
+    assert _table_schema_at(spark, str(tmp_path / "absent")) is None

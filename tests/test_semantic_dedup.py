@@ -294,17 +294,41 @@ def test_codebook_provenance_validated_on_load(spark, tmp_path):
     m = load_semantic_codebook(path, expect_dim=DIM,
                                expect_embedder="enc-v1")
     assert len(m.clusterCenters()[0]) == DIM
-    # dim mismatch is caught from the centroids themselves (works even
-    # for pre-provenance codebooks)
+    # dim mismatch is caught from the centroids themselves
     with pytest.raises(ValueError, match="dim"):
         load_semantic_codebook(path, expect_dim=DIM * 2)
     # embedder-space mismatch is caught from the sidecar
     with pytest.raises(ValueError, match="embedding space"):
         load_semantic_codebook(path, expect_embedder="other-enc-v9")
-    # a legacy codebook without a sidecar still loads (dim-only check)
+    # a codebook without the sidecar is refused, embedder check or not
     os.remove(os.path.join(path, "provenance.json"))
-    load_semantic_codebook(path, expect_dim=DIM,
-                           expect_embedder="other-enc-v9")
+    with pytest.raises(ValueError, match="no provenance.json"):
+        load_semantic_codebook(path, expect_dim=DIM)
+
+
+def test_codebook_without_provenance_is_refused(spark, tmp_path):
+    """A codebook directory without provenance.json (the format before
+    the sidecar) is refused by name: its embedding space cannot be
+    checked, and a same-dim codebook from another space would assign
+    noise while looking like successful dedup."""
+    import os
+
+    import pytest
+
+    from medallion_data_lake_spark.operators.ann import (
+        fit_semantic_codebook,
+        load_semantic_codebook,
+    )
+
+    df = spark.createDataFrame(
+        [(i, [float(i % 2), 1.0, 0.0, float(i)]) for i in range(8)],
+        "vec_id long, embedding array<double>")
+    path = str(tmp_path / "cb")
+    fit_semantic_codebook(df, path, cluster_size=4, embedder="enc-v1")
+    load_semantic_codebook(path, expect_embedder="enc-v1")
+    os.remove(os.path.join(path, "provenance.json"))
+    with pytest.raises(ValueError, match="no provenance.json"):
+        load_semantic_codebook(path)
 
 
 def test_curation_config_rejects_wrong_dim_codebook(spark, tmp_path):

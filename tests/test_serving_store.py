@@ -1063,3 +1063,39 @@ def test_http_status_separates_request_errors_from_faults(spark):
         finally:
             server.shutdown()
             server.server_close()
+
+
+def test_http_refuses_negative_and_oversized_content_length(spark):
+    """A negative Content-Length answers 400 (it would otherwise read
+    until the client closes, blocking the handler thread) and one above
+    MAX_BODY_BYTES answers 413 without buffering the body; the server
+    keeps serving."""
+    import socket
+
+    from medallion_data_lake_spark.serving import ServingLayer
+    from medallion_data_lake_spark.serving_http import (
+        MAX_BODY_BYTES,
+        serve_http_background,
+    )
+
+    def post_status(addr, length, body=b"{}"):
+        with socket.create_connection(addr, timeout=30) as s, \
+                s.makefile("rb") as answer:
+            s.sendall(
+                b"POST /query HTTP/1.1\r\nHost: x\r\n"
+                b"Content-Type: application/json\r\n"
+                + f"Content-Length: {length}\r\n\r\n".encode() + body
+            )
+            # the client keeps its side open: only the server's answer
+            # (not an EOF from us) may end the exchange
+            return int(answer.readline().split()[1])
+
+    server, _ = serve_http_background(ServingLayer(spark))
+    addr = server.server_address
+    try:
+        assert post_status(addr, -1) == 400
+        assert post_status(addr, MAX_BODY_BYTES + 1) == 413
+        assert post_status(addr, 2, b"{}") == 400  # no sql: still serving
+    finally:
+        server.shutdown()
+        server.server_close()

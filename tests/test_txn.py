@@ -725,7 +725,7 @@ def test_torn_txn_manifest_never_crashes_maintenance(spark, tmp_path):
     os.makedirs(root, exist_ok=True)
     torn = os.path.join(root, "txn-torn.json")
     open(torn, "w").write('{"txn_id": "txn-torn", "st')  # torn mid-write
-    mark_staging_txn(a, sa, root, "txn-torn", manifest_file=torn)
+    mark_staging_txn(a, sa, "txn-torn", torn)
 
     assert expire_staged(a, older_than_sec=0.0) == []  # protected, no crash
     assert {m["staging_id"] for m in list_staged(a)} == {sa}
@@ -853,7 +853,8 @@ def test_mark_refuses_to_resurrect_a_reclaimed_staging(spark, tmp_path):
     abandon_staged(a, sa)  # cron reclaims it in between
 
     with pytest.raises(FileNotFoundError, match="vanished"):
-        mark_staging_txn(a, sa, root, "txn-x", manifest=stale)
+        mark_staging_txn(a, sa, "txn-x", T._txn_file(root, "txn-x"),
+                         manifest=stale)
     assert ls(a) == [], "the stale dict must not be written back"
 
 
@@ -987,7 +988,8 @@ def test_mark_post_write_verify_closes_the_reclaim_race(spark, tmp_path):
     shutil.rmtree(os.path.join(a, stale["data_dir"]))
 
     with pytest.raises(FileNotFoundError, match="reclaimed concurrently"):
-        mark_staging_txn(a, sa, root, "txn-y", manifest=dict(stale))
+        mark_staging_txn(a, sa, "txn-y", T._txn_file(root, "txn-y"),
+                         manifest=dict(stale))
     assert ls(a) == [], "no resurrected manifest may remain"
 
 
@@ -1186,8 +1188,7 @@ def test_txn_ids_and_listing_are_chronological(spark, tmp_path):
 
 
 def test_malformed_txn_marker_heals_instead_of_crashing():
-    """r9-ADVICE wap.py:437 — a marker missing BOTH 'file' and 'root'
-    must classify through the torn-marker arm (grace-protect, then
+    """r9-ADVICE wap.py:437 — a marker missing 'file' must classify through the torn-marker arm (grace-protect, then
     free), not crash the expire_staged sweep with an eager KeyError."""
     import time as _time
 
